@@ -12,6 +12,8 @@ Differences from the reference, by design:
 from __future__ import annotations
 
 import argparse
+import contextlib
+import tempfile
 from datetime import datetime, timedelta
 from decimal import Decimal
 
@@ -115,55 +117,58 @@ def main(argv: list[str] | None = None) -> str:
 
     spark = get_spark(app_name="invoicing-cli")
     rates = rates_df(spark, card)
-    if dump_file:
-        # reference main.py:163-172 dump path; dump → parquet → Nova-shaped
-        # billing inputs (conversion replaces mysql2sqlite, fetch.py:98-124)
-        import tempfile
+    # Spark reads the converted dump lazily: its parquet temp dir must
+    # outlive the CSV write, and is removed right after it
+    with contextlib.ExitStack() as scratch:
+        if dump_file:
+            # reference main.py:163-172 dump path; dump → parquet → Nova-shaped
+            # billing inputs (conversion replaces mysql2sqlite, fetch.py:98-124)
+            from openstack_billing_from_db_spark.plans.billing import nova_instance_dim
+            from openstack_billing_from_db_spark.sources.mysqldump import (
+                nova_tables_from_dump,
+            )
 
-        from openstack_billing_from_db_spark.plans.billing import nova_instance_dim
-        from openstack_billing_from_db_spark.sources.mysqldump import (
-            nova_tables_from_dump,
-        )
+            instances, instance_extra, instance_actions = nova_tables_from_dump(
+                spark,
+                dump_file,
+                scratch.enter_context(tempfile.TemporaryDirectory(prefix="nova_dump_pq_")),
+            )
+            dim = nova_instance_dim(instances, instance_extra, args.start)
+            actions = instance_actions.select(
+                "instance_uuid", "created_at", "action", "message"
+            )
+            invoice = nova_invoice(
+                actions,
+                dim,
+                rates,
+                args.start,
+                args.end,
+                include_stopped_runtime=include_stopped,
+            )
+        else:
+            actions, dim = testdata_billing_tables(spark, args.data_dir)
+            invoice = nova_invoice(
+                actions,
+                dim,
+                rates,
+                args.start,
+                args.end,
+                include_stopped_runtime=include_stopped,
+                trigger_states=TESTDATA_TRIGGERS,
+                message_col=None,
+            )
+        from datetime import timezone
 
-        instances, instance_extra, instance_actions = nova_tables_from_dump(
-            spark, dump_file, tempfile.mkdtemp(prefix="nova_dump_pq_")
-        )
-        dim = nova_instance_dim(instances, instance_extra, args.start)
-        actions = instance_actions.select(
-            "instance_uuid", "created_at", "action", "message"
-        )
-        invoice = nova_invoice(
-            actions,
-            dim,
+        generated_at = datetime.now(timezone.utc).isoformat(timespec="seconds")
+        csv_rows = invoice_csv_rows(
+            invoice,
             rates,
-            args.start,
-            args.end,
-            include_stopped_runtime=include_stopped,
+            invoice_month=invoice_month,
+            window_start=args.start,
+            window_end=args.end,
+            generated_at=generated_at,
         )
-    else:
-        actions, dim = testdata_billing_tables(spark, args.data_dir)
-        invoice = nova_invoice(
-            actions,
-            dim,
-            rates,
-            args.start,
-            args.end,
-            include_stopped_runtime=include_stopped,
-            trigger_states=TESTDATA_TRIGGERS,
-            message_col=None,
-        )
-    from datetime import timezone
-
-    generated_at = datetime.now(timezone.utc).isoformat(timespec="seconds")
-    csv_rows = invoice_csv_rows(
-        invoice,
-        rates,
-        invoice_month=invoice_month,
-        window_start=args.start,
-        window_end=args.end,
-        generated_at=generated_at,
-    )
-    out = write_single_csv(csv_rows, args.output)
+        out = write_single_csv(csv_rows, args.output)
     if args.upload_to_s3:
         from openstack_billing_from_db_spark.sinks.csv import upload_invoice_to_s3
 

@@ -7,7 +7,9 @@ billing plan."""
 from __future__ import annotations
 
 import gzip
+import math
 import os
+import tempfile
 from datetime import datetime
 from decimal import Decimal
 
@@ -18,6 +20,7 @@ from openstack_billing_from_db_spark.sources.fetch import (
     find_latest_dump_key,
 )
 from openstack_billing_from_db_spark.sources.mysqldump import (
+    NOVA_TABLES,
     mysqldump_to_parquet,
     nova_tables_from_dump,
 )
@@ -261,6 +264,62 @@ def test_cli_invoices_from_dump(tmp_path, spark):
     assert any(",48,OpenStack GPUA100,1.803,86.54," in ln for ln in body), body
 
 
+def test_cli_dump_run_removes_its_parquet_temp_dir(tmp_path, spark, monkeypatch):
+    """The converted parquet lives in a temp dir that is gone once the CSV
+    is written."""
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    test_cli_invoices_from_dump(tmp_path, spark)
+    assert not list(scratch.glob("nova_dump_pq_*"))
+
+
+def test_mysqldump_batch_rows_sets_row_groups_only(tmp_path):
+    """batch_rows changes the row-group layout, never the rows; tables not
+    asked for get no file."""
+    import pyarrow.parquet as pq
+
+    dump = _write_dump(tmp_path)
+    default = mysqldump_to_parquet(dump, str(tmp_path / "default"), tables=NOVA_TABLES)
+    tiny = mysqldump_to_parquet(dump, str(tmp_path / "tiny"), tables=NOVA_TABLES, batch_rows=1)
+    for table in NOVA_TABLES:
+        assert pq.read_table(tiny[table]).equals(pq.read_table(default[table]))
+    assert pq.ParquetFile(default["instances"]).num_row_groups == 1
+    assert pq.ParquetFile(tiny["instances"]).num_row_groups == 3
+    assert set(tiny) == set(NOVA_TABLES)
+    assert sorted(os.listdir(tmp_path / "tiny")) == sorted(f"{t}.parquet" for t in NOVA_TABLES)
+
+
+_SMALL_DUMP = """CREATE TABLE `t` (
+  `a` int DEFAULT NULL,
+  `b` varchar(255) DEFAULT NULL
+) ENGINE=InnoDB;
+INSERT INTO `t` VALUES (1,'x'),(2,NULL);
+INSERT INTO `t` VALUES {values}
+"""
+
+
+@pytest.mark.parametrize(
+    "values, error",
+    [
+        ("(3,'y'),(4);", "row width 1 != schema 2"),
+        ("(3,'y',5);", "row width 3 != schema 2"),
+        ("(3,'unterminated);", "malformed VALUES"),
+        ("(3,'y'),(4,'z", "malformed VALUES"),  # dump cut mid-string
+        ("(3,'y'),(4,'z')", "malformed VALUES"),  # dump cut between rows
+        ("(3,'y') junk (4,'z');", "malformed VALUES"),
+        ("3,'y');", "malformed VALUES"),
+    ],
+)
+def test_mysqldump_malformed_insert_names_table_and_line(tmp_path, values, error):
+    path = tmp_path / "bad.sql"
+    path.write_text(_SMALL_DUMP.format(values=values))
+    with pytest.raises(ValueError) as exc:
+        mysqldump_to_parquet(str(path), str(tmp_path / "pq"))
+    msg = str(exc.value)
+    assert msg.startswith(f"t: {error}") and msg.endswith("(dump line 6)"), msg
+
+
 # --- tokenizer fuzz: render random rows as MySQL INSERT syntax, parse back ---
 
 from hypothesis import given, settings, strategies as st
@@ -297,3 +356,92 @@ def test_iter_value_tuples_round_trip(rows):
     text = ",".join("(" + ",".join(_render_sql_value(v) for v in r) + ")" for r in rows)
     got = list(iter_value_tuples(text + ";"))
     assert got == rows
+
+
+@pytest.mark.parametrize("text", ["(1,'abc", "(1,2", "(1,2)", "(1),,(2);", "(1)(2);"])
+def test_iter_value_tuples_rejects_malformed(text):
+    with pytest.raises(ValueError, match="malformed VALUES"):
+        list(iter_value_tuples(text))
+
+
+# --- converter fuzz: random schemas and rows rendered as a dump, converted ---
+
+# column kind → (MySQL type, arrow type the converter maps it to)
+_KINDS = {
+    "int": ("int", "int64"),
+    "bigint": ("bigint", "int64"),
+    "double": ("double", "float64"),
+    "varchar": ("varchar(255)", "string"),
+    "text": ("text", "string"),
+}
+_finite = st.floats(allow_nan=False, allow_infinity=False)
+_awkward_text = st.lists(
+    st.one_of(
+        st.sampled_from(["'", "\\", "),(", "(", ",", "\n", "\t", "\r", "\0", ";", "NULL", "''"]),
+        st.characters(blacklist_categories=("Cs",)),
+    ),
+    max_size=8,
+).map("".join)
+_ARROW_CELLS = {
+    "int64": st.integers(-(2**63), 2**63 - 1),
+    "float64": st.one_of(_finite, st.integers(-(2**53), 2**53)),
+    "string": st.one_of(_awkward_text, st.integers(-(2**62), 2**62), _finite),
+}
+
+
+def _render_dump_value(v, doubled_quotes: bool) -> str:
+    if v is None:
+        return "NULL"
+    if not isinstance(v, str):
+        return repr(v)
+    out = v.replace("\\", "\\\\").replace("'", "''" if doubled_quotes else "\\'")
+    out = out.replace("\n", "\\n").replace("\t", "\\t").replace("\r", "\\r")
+    return "'" + out.replace("\0", "\\0") + "'"
+
+
+@settings(max_examples=60, deadline=None)
+@given(data=st.data())
+def test_mysqldump_to_parquet_round_trip(tmp_path_factory, data):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    kinds = data.draw(st.lists(st.sampled_from(sorted(_KINDS)), min_size=1, max_size=6))
+    schema = pa.schema([(f"c{k}", _KINDS[kind][1]) for k, kind in enumerate(kinds)])
+    rows = data.draw(
+        st.lists(
+            st.tuples(*(st.one_of(st.none(), _ARROW_CELLS[_KINDS[k][1]]) for k in kinds)),
+            min_size=2,
+            max_size=12,
+        )
+    )
+    doubled = data.draw(st.booleans())
+    cut = data.draw(st.integers(1, len(rows) - 1))
+    batch_rows = data.draw(st.integers(1, 5))
+
+    columns = ",\n".join(f"  `c{k}` {_KINDS[kind][0]} DEFAULT NULL" for k, kind in enumerate(kinds))
+    lines = [f"CREATE TABLE `fuzz` (\n{columns}\n) ENGINE=InnoDB;\n"]
+    for part in (rows[:cut], rows[cut:]):
+        tuples = ",".join(
+            "(" + ",".join(_render_dump_value(v, doubled) for v in r) + ")" for r in part
+        )
+        lines.append(f"INSERT INTO `fuzz` VALUES {tuples};\n")
+    tmp = tmp_path_factory.mktemp("fuzz")
+    dump = tmp / "fuzz.sql"
+    dump.write_text("".join(lines), encoding="utf-8")
+
+    paths = mysqldump_to_parquet(str(dump), str(tmp / "pq"), batch_rows=batch_rows)
+
+    # bare numbers in string columns keep their Python str()
+    want = pa.Table.from_pylist(
+        [
+            {
+                f.name: str(v) if f.type == pa.string() and v is not None and not isinstance(v, str) else v
+                for f, v in zip(schema, r)
+            }
+            for r in rows
+        ],
+        schema=schema,
+    )
+    got = pq.ParquetFile(paths["fuzz"])
+    assert got.read().equals(want)
+    assert got.num_row_groups == math.ceil(len(rows) / batch_rows)
