@@ -375,7 +375,7 @@ def dhash_words(h: int, *, bits: int, word_bits: int) -> list[int]:
     word i carries bits [i·word_bits, (i+1)·word_bits)). Fingerprints
     past 63 bits (grid ≥ 9) cannot ride one BIGINT; aligning word_bits
     to a multiple of the banding's band_bits keeps every band inside
-    one word (dedup.multiword_hamming_pairs relies on this)."""
+    one word (dedup.hamming_pairs relies on this)."""
     if word_bits < 1 or word_bits > 63:
         raise ValueError(f"word_bits must be in [1, 63]; got {word_bits}")
     n = -(-bits // word_bits)
@@ -447,7 +447,7 @@ def audio_delta_hash(samples: np.ndarray, *, n_frames: int = AUDIO_FRAMES) -> in
     per consecutive-frame comparison (next frame louder), packed
     LSB-first into ``n_frames − 1`` bits. 56 sign-safe BIGINT bits at
     the default, so the output drops straight into
-    dedup.simhash_near_duplicates / the tuned phash banding — audio
+    dedup.hamming_pairs / the tuned phash banding — audio
     near-dup reuses the image path's verified join kernels."""
     x = np.abs(samples.astype(np.int64))
     per = x.shape[0] // n_frames

@@ -43,9 +43,8 @@ def _multiword_band_layout(
     word_bits: int,
     band_bits: int,
     bits: int | None,
-    max_hamming: int,
 ) -> tuple[int, int, int, int]:
-    """Validated band geometry shared by the multi-word hamming kernels:
+    """Validated band geometry of the banded hamming join:
     returns ``(bpw, n_bands, bits, mask)``. ``band_bits`` must divide
     ``word_bits`` so a band never straddles two words — EXCEPT when
     ``n_words == 1``, where straddling is impossible and any width with
@@ -53,8 +52,8 @@ def _multiword_band_layout(
     kernel's banding exactly (band b reads bits [b·band_bits, …) of the
     one word; the tail bits past ``bpw·band_bits`` are uncovered, which
     only ever RAISES per-band selectivity and never breaks pigeonhole
-    recall — the check below binds on the surviving band count). This
-    is what lets the audio admission default share the batch path's
+    recall — hamming_pairs' check binds on the surviving band count).
+    This is what lets the audio admission default share the batch path's
     tuner-derived 11-bit bands over a 56-bit word (ADVICE r11)."""
     if n_words > 1 and word_bits % band_bits:
         raise ValueError(
@@ -73,12 +72,6 @@ def _multiword_band_layout(
             f"bits ({bits}) must be in (0, {n_words * word_bits}]"
         )
     n_bands = min(full_bands, -(-bits // band_bits))
-    if n_bands <= max_hamming:
-        raise ValueError(
-            f"only {n_bands} non-padding bands at band_bits={band_bits} "
-            f"over a {bits}-bit fingerprint — pigeonhole recall needs "
-            f"more than max_hamming={max_hamming}; narrow the bands"
-        )
     return bpw, n_bands, bits, (1 << band_bits) - 1
 
 
@@ -482,665 +475,234 @@ def simhash_near_duplicates(
     max_hamming: int = 4,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Banded hamming join over simhash fingerprints: candidates share at
-    least one exact band (probabilistic recall, standard LSH trade-off),
-    verified with bit_count(xor) ≤ max_hamming.
-
-    Output: (doc_a, doc_b, hamming).
-
-    ``max_bucket_size`` caps per-band bucket membership the same way
-    ``minhash_near_duplicates`` does (oversized buckets — boilerplate
-    families with quadratic pair counts — emit nothing; a pair survives
-    iff one of its colliding bands is under the cap)."""
-    n_bands = bits // band_bits
-    mask = (1 << band_bits) - 1
-    # persisted: both sides of the self-join read the same fingerprints
-    # instead of recomputing the simhash lineage twice
-    fingerprints = tracked_persist(fingerprints)
-    # one SQL parse for the band melt (see the _words_sql block note)
-    struct_arr = ", ".join(
-        f"named_struct('band', {k}, 'bucket', "
-        f"(shiftright(simhash, {k * band_bits}) & {mask}))"
-        for k in range(n_bands)
+    """:func:`hamming_pairs` over one-word (doc_id, simhash) fingerprints
+    minus its pigeonhole check: the 4 × 8-bit default over 32 bits is
+    plain LSH, so recall at ``max_hamming=4`` is probabilistic (q37).
+    Output: (doc_a, doc_b, hamming)."""
+    layout = _multiword_band_layout(
+        n_words=1, word_bits=bits, band_bits=band_bits, bits=bits
     )
-    melted = fingerprints.select(
-        "doc_id",
-        "simhash",
-        F.expr(f"explode(array({struct_arr}))").alias("bb"),
-    ).select("doc_id", "simhash", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-    side_cols = ["band", "bucket", "doc_id", "simhash"]
-    if max_bucket_size is not None:
-        sizes = melted.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("__bn")
-        )
-        with_bn = melted.join(sizes, ["band", "bucket"])
-        bnvec = with_bn.groupBy("doc_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("band", "__bn"))),
-                lambda s: s["__bn"],
-            ).alias("bnvec")
-        )
-        melted = (
-            with_bn.filter(F.col("__bn") <= max_bucket_size)
-            .join(bnvec, "doc_id")
-        )
-        side_cols.append("bnvec")
-
-    def _side(suffix: str) -> DataFrame:
-        renames = {"doc_id": f"doc_{suffix}", "simhash": f"fp_{suffix}",
-                   "bnvec": f"bv_{suffix}"}
-        # bv is read only via bv_a (shared bucket ⇒ equal sizes) — drop
-        # it from the b side of the self-join
-        cols = side_cols if suffix == "a" else [
-            c for c in side_cols if c != "bnvec"
-        ]
-        return melted.select(
-            *[F.col(c).alias(renames.get(c, c)) for c in cols]
-        )
-
-    a, b = _side("a"), _side("b")
-
-    # canonical-band dedup: a pair colliding in m bands would otherwise be
-    # emitted m times and need a full distinct SHUFFLE over the (huge)
-    # near-dup output. Instead keep a joined row only when NO EARLIER band
-    # also matches — both fingerprints are present, so this is a map-side
-    # bit test, each pair survives exactly once, and the distinct exchange
-    # disappears from the plan (pinned by test_round2_fixes). With a
-    # bucket cap, an earlier band only counts if its bucket was kept.
-    fbo = "true"
-    for j in range(n_bands):
-        eq_j = (
-            f"((shiftright(fp_a, {j * band_bits}) & {mask}) = "
-            f"(shiftright(fp_b, {j * band_bits}) & {mask}))"
-        )
-        earlier = f"((band > {j}) AND {eq_j})"
-        if max_bucket_size is not None:
-            earlier = f"({earlier} AND (bv_a[{j}] <= {max_bucket_size}))"
-        fbo = f"({fbo} AND (NOT {earlier}))"
-
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .filter(F.expr(fbo))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+    # persisted: both self-join sides read the same fingerprints
+    fps = tracked_persist(fingerprints).select("doc_id", F.col("simhash").alias("w0"))
+    return _hamming_join(
+        fps, ["w0"], band_bits, layout, max_hamming=max_hamming,
+        max_bucket_size=max_bucket_size, persist_input=False,
     )
 
 
-def multiword_hamming_pairs(
+def hamming_pairs(
     fingerprints: DataFrame,
     *,
-    n_words: int,
     word_bits: int,
     band_bits: int,
     max_hamming: int = 4,
     bits: int | None = None,
     group_col: str | None = None,
+    min_group_matches: int | None = None,
     max_bucket_size: int | None = None,
+    index: DataFrame | None = None,
     persist_input: bool = True,
 ) -> DataFrame:
-    """Banded hamming join over MULTI-WORD fingerprints (doc_id, w0 ..
-    w{n-1}) — the wide-hash companion of :func:`simhash_near_duplicates`
-    for fingerprints past 63 bits (e.g. the 72-bit grid=9 dHash,
-    media.dhash_words packing). ``band_bits`` must divide ``word_bits``
-    so every band lives inside one word: band b reads bits
-    [band_bits·(b mod bpw), …) of word b div bpw. Wider bands are the
-    bucket-saturation lever — 12-bit bands give 4096 buckets/band vs
-    256 at 8 bits — while keeping the pigeonhole recall guarantee
-    whenever n_bands > max_hamming (a qualifying pair always shares at
-    least one clean band).
+    """Banded hamming join over (doc_id[, group_col], w0 .. w{k})
+    fingerprints split into BIGINT words of ``word_bits`` each (one
+    word for 56-bit dHash, two for the 72-bit grid=9 mesh, three for
+    132 bits — media.dhash_words packing). Band b reads bits
+    [band_bits·(b mod bpw), …) of word b div bpw; candidates share one
+    exact band, the verify is Σᵢ bit_count(wᵢᵃ xor wᵢᵇ) ≤
+    ``max_hamming``. More bands than ``max_hamming`` are required, so a
+    qualifying pair always shares a clean band (pigeonhole recall);
+    wider bands are the bucket-saturation lever (4096 buckets per band
+    at 12 bits vs 256 at 8).
 
-    ``bits`` is the fingerprint's real width (default: the full
-    ``n_words·word_bits``). When the packing leaves the top of the last
-    word as zero padding (say 60 bits in 2×36 words), any band lying
-    ENTIRELY in padding would put every doc in bucket 0 and silently
-    degenerate the banded join to all-pairs — those bands are skipped;
-    only bands whose bit range intersects [0, bits) participate, on
-    both the melt and the canonical-band test. The pigeonhole guarantee
-    then needs the SURVIVING band count > max_hamming, which is checked.
+    ``bits`` is the fingerprint's real width (default: every word
+    bit). Bands lying entirely in the zero padding past it would put
+    every doc in bucket 0, so they are skipped on the melt and the
+    canonical-band test; the pigeonhole check binds on the surviving
+    bands. See :func:`_multiword_band_layout` for the geometry rules.
 
-    Candidates share an exact band; the verify is the full hamming
-    distance Σᵢ bit_count(wᵢᵃ xor wᵢᵇ) ≤ max_hamming. Pairs colliding
-    in several bands are emitted once via the same canonical-band
-    (no-earlier-band-matches) map-side test simhash_near_duplicates
-    uses, so no distinct shuffle. Output: (doc_a, doc_b, hamming).
+    A pair colliding in several bands is kept only from its first
+    matching band (a map-side bit test over both fingerprints), so each
+    pair is emitted once with no distinct shuffle.
 
-    ``group_col`` scopes the banding WITHIN a group: the join keys
-    become (group, band, bucket) and the output carries the group —
-    how :func:`framewise_multiword_hamming_pairs` matches video frames
-    at the same position only. ``max_bucket_size`` caps per-(group,)
-    (band, bucket) membership exactly like
-    :func:`framewise_hamming_pairs`: a degenerate population
-    (constant/black frames) collapses into one bucket and produces
-    quadratic candidates at scale; with the cap, oversized buckets
-    emit nothing and a pair survives iff one of its colliding bands is
-    under the cap (the canonical-band test is bucket-aware, so a
-    surviving pair is still emitted exactly once).
+    ``group_col`` scopes the banding within a group — video frames at
+    the same position: join keys become (group, band, bucket) and the
+    output carries the group. ``min_group_matches`` then counts the
+    matching groups per pair and keeps pairs with at least that many,
+    replacing ``hamming`` with ``n_frames_matched``.
 
-    ``persist_input=False`` skips the fingerprint cache — for callers
-    whose input is already a cheap projection of a persisted frame
-    (:func:`chunked_hamming_pairs` subsets: caching every chunk-pair
-    filter would hold ~(C+1)× the corpus in storage concurrently)."""
-    # a band whose start bit is past the fingerprint width is pure
-    # padding (constant bucket 0 for every doc) — _multiword_band_layout
-    # drops it from both the melt and the canonical-band test (ADVICE r8)
-    bpw, n_bands, bits, mask = _multiword_band_layout(
-        n_words=n_words,
-        word_bits=word_bits,
-        band_bits=band_bits,
-        bits=bits,
-        max_hamming=max_hamming,
+    ``max_bucket_size`` caps per-([group,] band, bucket) membership: a
+    degenerate population (constant/black frames, boilerplate) falls
+    into one bucket with quadratic candidates; oversized buckets emit
+    nothing, and a pair survives iff one of its colliding bands is
+    under the cap (the canonical-band test skips over-cap bands).
+
+    ``index=None`` is the batch self-join: output
+    (doc_a, doc_b[, group], hamming) with doc_a < doc_b. An ``index``
+    (same columns) makes it the incremental probe of the new
+    ``fingerprints`` against index PLUS batch: output
+    (new_id, match_id[, group], hamming, match_in_new), self excluded,
+    with no id-order cut — a verdict is per new doc, so a new-new pair
+    appears in both directions. The index side is narrow BIGINT rows;
+    bucket occupancy for the cap is measured on index + batch.
+
+    ``persist_input=False`` skips caching ``fingerprints`` — for
+    callers whose input is already a cheap projection of a persisted
+    frame (:func:`chunked_hamming_pairs` subsets)."""
+    cols = set(fingerprints.columns)
+    wcols: list[str] = []
+    while f"w{len(wcols)}" in cols:
+        wcols.append(f"w{len(wcols)}")
+    if not wcols:
+        raise ValueError(f"fingerprints need a w0 column, got {sorted(cols)}")
+    layout = _multiword_band_layout(
+        n_words=len(wcols), word_bits=word_bits, band_bits=band_bits, bits=bits
     )
-    wcols = [f"w{i}" for i in range(n_words)]
+    _, n_bands, bits, _ = layout
+    if n_bands <= max_hamming:
+        raise ValueError(
+            f"only {n_bands} non-padding bands at band_bits={band_bits} "
+            f"over a {bits}-bit fingerprint — pigeonhole recall needs "
+            f"more than max_hamming={max_hamming}; narrow the bands"
+        )
+    if min_group_matches is not None and (
+        group_col is None or min_group_matches < 1
+    ):
+        raise ValueError(
+            f"min_group_matches must be >= 1 with a group_col, got "
+            f"{min_group_matches} with group_col={group_col!r}"
+        )
+    return _hamming_join(
+        fingerprints, wcols, band_bits, layout,
+        max_hamming=max_hamming, group_col=group_col,
+        min_group_matches=min_group_matches,
+        max_bucket_size=max_bucket_size, index=index,
+        persist_input=persist_input,
+    )
+
+
+def _hamming_join(
+    fingerprints: DataFrame,
+    wcols: list[str],
+    band_bits: int,
+    layout: tuple[int, int, int, int],
+    *,
+    max_hamming: int,
+    group_col: str | None = None,
+    min_group_matches: int | None = None,
+    max_bucket_size: int | None = None,
+    index: DataFrame | None = None,
+    persist_input: bool = True,
+) -> DataFrame:
+    """The body of :func:`hamming_pairs` after validation."""
+    bpw, n_bands, _, mask = layout
     gcols = [group_col] if group_col is not None else []
+    keys = [*gcols, "band", "bucket"]
+    fp_cols = ["doc_id", *gcols, *wcols]
     if persist_input:
         fingerprints = tracked_persist(fingerprints)
 
-    # one SQL parse for the band melt / canonical-band test / hamming sum
-    # (chained py4j Column calls cost one driver round trip per operator;
-    # at n_bands~11 × n_words~3 that is seconds of pure build time — same
-    # treatment as simhash_near_duplicates)
+    # one SQL parse each for the band melt, the canonical-band test and
+    # the hamming sum (chained py4j Column calls cost one driver round
+    # trip per operator; at 11 bands × 3 words that is seconds of build)
     struct_arr = ", ".join(
         f"named_struct('band', {b}, 'bucket', "
         f"(shiftright(w{b // bpw}, {band_bits * (b % bpw)}) & {mask}))"
         for b in range(n_bands)
     )
-    melted = fingerprints.select(
-        "doc_id",
-        *gcols,
-        *wcols,
-        F.expr(f"explode(array({struct_arr}))").alias("bb"),
-    ).select(
-        "doc_id",
-        *gcols,
-        *wcols,
-        F.col("bb.band").alias("band"),
-        F.col("bb.bucket").alias("bucket"),
-    )
 
-    side_extra: list[str] = []
-    if max_bucket_size is not None:
-        sizes = melted.groupBy(*gcols, "band", "bucket").agg(
-            F.count(F.lit(1)).alias("__bn")
+    def melt(df: DataFrame, keep: list[str]) -> DataFrame:
+        return df.select(
+            *keep, F.expr(f"explode(array({struct_arr}))").alias("bb")
+        ).select(
+            *keep,
+            F.col("bb.band").alias("band"),
+            F.col("bb.bucket").alias("bucket"),
         )
-        with_bn = melted.join(sizes, [*gcols, "band", "bucket"])
-        # per-(doc[, group]) vector of bucket sizes in band order: the
-        # canonical-band test below needs each EARLIER band's occupancy
+
+    if index is None:
+        ids, tag = ["doc_a", "doc_b"], []
+        a_m = b_m = melt(fingerprints, fp_cols)
+    else:
+        ids, tag = ["new_id", "match_id"], ["match_in_new"]
+        union = index.select(
+            *fp_cols, F.lit(False).alias("match_in_new")
+        ).unionByName(
+            fingerprints.select(*fp_cols, F.lit(True).alias("match_in_new"))
+        )
+        a_m, b_m = melt(fingerprints, fp_cols), melt(union, [*fp_cols, *tag])
+
+    bv = []
+    if max_bucket_size is not None:
+        # occupancy over the b side (the batch, or index + batch), keyed
+        # like the join; a colliding pair shares the bucket, so the b
+        # side's per-(doc[, group]) size vector in band order decides the
+        # canonical-band test for both. The probe's a side (new ⊆ union)
+        # needs no filter: dropping the oversized b rows empties the band
+        sizes = b_m.groupBy(*keys).agg(F.count(F.lit(1)).alias("__bn"))
+        with_bn = b_m.join(sizes, keys)
         bnvec = with_bn.groupBy("doc_id", *gcols).agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("band", "__bn"))),
                 lambda s: s["__bn"],
-            ).alias("bnvec")
+            ).alias("bv")
         )
-        melted = (
-            with_bn.filter(F.col("__bn") <= max_bucket_size)
-            .join(bnvec, ["doc_id", *gcols])
+        b_m = with_bn.filter(F.col("__bn") <= max_bucket_size).join(
+            bnvec, ["doc_id", *gcols]
         )
-        side_extra.append("bnvec")
+        if index is None:
+            a_m = b_m
+        bv = ["bv"]
 
-    def _side(suffix: str) -> DataFrame:
-        cols = [F.col("band"), F.col("bucket"), F.col("doc_id").alias(f"doc_{suffix}")]
-        cols += [F.col(g) for g in gcols]
-        cols += [F.col(w).alias(f"{w}{suffix}") for w in wcols]
-        if suffix == "a":
-            # bv is read only via bv_a (shared bucket ⇒ equal sizes)
-            cols += [F.col(c).alias("bv_a") for c in side_extra]
-        return melted.select(*cols)
-
-    a, b_ = _side("a"), _side("b")
-    fbo = "true"
-    for j in range(n_bands):
-        word_a, word_b = f"w{j // bpw}a", f"w{j // bpw}b"
-        sh = band_bits * (j % bpw)
-        eq_j = (
-            f"((shiftright({word_a}, {sh}) & {mask}) = "
-            f"(shiftright({word_b}, {sh}) & {mask}))"
-        )
-        earlier = f"((band > {j}) AND {eq_j})"
-        if max_bucket_size is not None:
-            earlier = f"({earlier} AND (bv_a[{j}] <= {max_bucket_size}))"
-        fbo = f"({fbo} AND (NOT {earlier}))"
-
-    ham_sql = " + ".join(f"bit_count({w}a ^ {w}b)" for w in wcols)
-    hamming = F.expr(f"CAST((0 + {ham_sql}) AS INT)")
-    return (
-        a.join(b_, [*gcols, "band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .filter(F.expr(fbo))
-        .select("doc_a", "doc_b", *gcols, hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def framewise_hamming_pairs(
-    fingerprints: DataFrame,
-    *,
-    bits: int,
-    band_bits: int,
-    max_hamming: int = 4,
-    min_frames: int = 2,
-    frame_col: str = "frame_idx",
-    fp_col: str = "dhash",
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Frame-majority near-dup join for MULTI-FINGERPRINT entities
-    (videos as sets of per-frame hashes): input is one
-    (doc_id, frame_idx, fp) row per sampled frame; two docs pair iff at
-    least ``min_frames`` frame positions match at hamming ≤
-    ``max_hamming``. The banded join keys on (frame, band, bucket) — a
-    candidate must share a band WITHIN the same frame position — and
-    the canonical-band test keeps exactly one row per
-    (pair, frame), so the majority count is a plain count(1) per pair,
-    no distinct shuffle. Per-frame recall keeps the pigeonhole
-    guarantee whenever bits//band_bits > max_hamming; the frame melt is
-    narrow (doc, frame, fp, band, bucket) rows.
-
-    ``max_bucket_size`` caps per-(frame, band) bucket membership the
-    same way :func:`simhash_near_duplicates` does — a degenerate frame
-    population (constant/black frames, common in real video) collapses
-    into one (frame, band, bucket) key and produces quadratic candidate
-    pairs at scale; with the cap, oversized buckets emit nothing and a
-    (pair, frame) match survives iff one of its colliding bands is
-    under the cap (the canonical-band test is bucket-aware, so the
-    surviving frame match is still counted exactly once).
-
-    Output: (doc_a, doc_b, n_frames_matched ≥ min_frames)."""
-    n_bands = bits // band_bits
-    if n_bands <= max_hamming:
-        raise ValueError(
-            f"only {n_bands} bands at band_bits={band_bits} — pigeonhole "
-            f"recall needs more than max_hamming={max_hamming}"
-        )
-    if min_frames < 1:
-        raise ValueError(f"min_frames must be >= 1, got {min_frames}")
-    mask = (1 << band_bits) - 1
-    fingerprints = tracked_persist(
-        fingerprints.select(
-            "doc_id",
-            F.col(frame_col).alias("__f"),
-            F.col(fp_col).alias("__fp"),
-        )
-    )
-    # single-parse SQL band melt (same py4j-build-cost treatment as
-    # simhash_near_duplicates / multiword_hamming_pairs)
-    struct_arr = ", ".join(
-        f"named_struct('band', {k}, 'bucket', "
-        f"(shiftright(__fp, {k * band_bits}) & {mask}))"
-        for k in range(n_bands)
-    )
-    melted = fingerprints.select(
-        "doc_id",
-        "__f",
-        "__fp",
-        F.expr(f"explode(array({struct_arr}))").alias("bb"),
-    ).select(
-        "doc_id",
-        "__f",
-        "__fp",
-        F.col("bb.band").alias("band"),
-        F.col("bb.bucket").alias("bucket"),
-    )
-
-    side_cols = ["doc_id", "__fp", "__f", "band", "bucket"]
-    if max_bucket_size is not None:
-        sizes = melted.groupBy("__f", "band", "bucket").agg(
-            F.count(F.lit(1)).alias("__bn")
-        )
-        with_bn = melted.join(sizes, ["__f", "band", "bucket"])
-        # per-(doc, frame) vector of bucket sizes in band order: the
-        # canonical-band test below needs each EARLIER band's occupancy
-        bnvec = with_bn.groupBy("doc_id", "__f").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("band", "__bn"))),
-                lambda s: s["__bn"],
-            ).alias("bnvec")
-        )
-        melted = (
-            with_bn.filter(F.col("__bn") <= max_bucket_size)
-            .join(bnvec, ["doc_id", "__f"])
-        )
-        side_cols.append("bnvec")
-
-    def _side(suffix: str) -> DataFrame:
-        renames = {
-            "doc_id": f"doc_{suffix}",
-            "__fp": f"fp_{suffix}",
-            "bnvec": f"bv_{suffix}",
-        }
-        # bv is read only via bv_a (shared bucket ⇒ equal sizes) — drop
-        # it from the b side of the self-join
-        cols = side_cols if suffix == "a" else [
-            c for c in side_cols if c != "bnvec"
-        ]
-        return melted.select(
-            *[F.col(c).alias(renames.get(c, c)) for c in cols]
-        )
-
-    a, b = _side("a"), _side("b")
-    fbo = "true"
-    for j in range(n_bands):
-        eq_j = (
-            f"((shiftright(fp_a, {j * band_bits}) & {mask}) = "
-            f"(shiftright(fp_b, {j * band_bits}) & {mask}))"
-        )
-        earlier = f"((band > {j}) AND {eq_j})"
-        if max_bucket_size is not None:
-            earlier = f"({earlier} AND (bv_a[{j}] <= {max_bucket_size}))"
-        fbo = f"({fbo} AND (NOT {earlier}))"
-    frame_matches = (
-        a.join(b, ["__f", "band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .filter(F.expr(fbo))
-        .filter(
-            F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-            <= F.lit(max_hamming)
-        )
-        .select("doc_a", "doc_b", "__f")
-    )
-    return (
-        frame_matches.groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_frames_matched"))
-        .filter(F.col("n_frames_matched") >= min_frames)
-    )
-
-
-def framewise_multiword_hamming_pairs(
-    fingerprints: DataFrame,
-    *,
-    n_words: int,
-    word_bits: int,
-    band_bits: int,
-    max_hamming: int = 4,
-    min_frames: int = 2,
-    frame_col: str = "frame_idx",
-    bits: int | None = None,
-    max_bucket_size: int | None = None,
-    persist_input: bool = True,
-) -> DataFrame:
-    """Frame-majority near-dup join over MULTI-WORD per-frame
-    fingerprints — the wide-hash companion of
-    :func:`framewise_hamming_pairs` for per-frame hashes past 63 bits
-    (e.g. the 72-bit grid=9 frame dHash): input is one
-    (doc_id, frame_idx, w0 .. w{n-1}) row per sampled frame; two docs
-    pair iff at least ``min_frames`` frame positions match at hamming ≤
-    ``max_hamming``. The per-(pair, frame) match set is exactly
-    :func:`multiword_hamming_pairs` scoped within the frame position
-    (``group_col=frame_col`` — banding keys (frame, band, bucket), so
-    the tuner's occupancy bound applies per frame position, and the
-    canonical-band test keeps one row per (pair, frame)); the majority
-    count is then a plain count(1) per pair, no distinct shuffle.
-    ``max_bucket_size`` passes through the degenerate-frame skew cap.
-    Output: (doc_a, doc_b, n_frames_matched ≥ min_frames)."""
-    if min_frames < 1:
-        raise ValueError(f"min_frames must be >= 1, got {min_frames}")
-    frame_pairs = multiword_hamming_pairs(
-        fingerprints,
-        n_words=n_words,
-        word_bits=word_bits,
-        band_bits=band_bits,
-        max_hamming=max_hamming,
-        bits=bits,
-        group_col=frame_col,
-        max_bucket_size=max_bucket_size,
-        persist_input=persist_input,
-    )
-    return (
-        frame_pairs.groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_frames_matched"))
-        .filter(F.col("n_frames_matched") >= min_frames)
-    )
-
-
-def framewise_hamming_matches(
-    existing: DataFrame,
-    new: DataFrame,
-    *,
-    bits: int,
-    band_bits: int,
-    max_hamming: int = 4,
-    min_frames: int = 2,
-    frame_col: str = "frame_idx",
-    fp_col: str = "dhash",
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Probe NEW multi-fingerprint entities (videos: one hash per
-    sampled frame) against a persisted per-frame fingerprint index PLUS
-    the new batch itself — the incremental companion of
-    :func:`framewise_hamming_pairs` (what
-    :func:`multiword_hamming_matches` is to the single-entity pairs
-    join). Both inputs are (doc_id, frame_idx, fp) rows; a candidate
-    shares an exact band WITHIN the same frame position between a NEW
-    clip and any index-or-batch clip (self excluded), the verify is the
-    per-frame hamming ≤ ``max_hamming``, the canonical-band test keeps
-    one row per (new_id, match_id, frame) with no distinct shuffle, and
-    the frame-majority gate keeps ordered pairs matching on at least
-    ``min_frames`` positions. No ``doc_a < doc_b`` cut: a verdict is
-    per NEW clip, so a new-new family pair appears in both directions.
-    Per-epoch work is (batch frame-bands) × (per-frame index bucket
-    occupancy) — the index side carries only narrow (doc, frame, hash)
-    BIGINT rows; payloads never enter.
-
-    ``max_bucket_size`` is the same degenerate-frame skew cap as
-    :func:`framewise_hamming_pairs`: constant/black frames accumulate
-    in the persisted index across epochs, so without the cap each new
-    batch's black frames join O(batch × full index) candidates.
-    Occupancy is measured on the index+batch union per (frame, band,
-    bucket); a frame match survives iff one of its colliding bands is
-    under the cap (bucket-aware canonical-band test — a colliding pair
-    shares the bucket, so the union-side size vector decides for both).
-
-    Output: (new_id, match_id, n_frames_matched, match_in_new)."""
-    n_bands = bits // band_bits
-    if n_bands <= max_hamming:
-        raise ValueError(
-            f"only {n_bands} bands at band_bits={band_bits} — pigeonhole "
-            f"recall needs more than max_hamming={max_hamming}"
-        )
-    if min_frames < 1:
-        raise ValueError(f"min_frames must be >= 1, got {min_frames}")
-    mask = (1 << band_bits) - 1
-    new = tracked_persist(
-        new.select(
-            "doc_id",
-            F.col(frame_col).alias("__f"),
-            F.col(fp_col).alias("__fp"),
-        )
-    )
-    union = existing.select(
-        "doc_id",
-        F.col(frame_col).alias("__f"),
-        F.col(fp_col).alias("__fp"),
-        F.lit(False).alias("__new"),
-    ).unionByName(new.withColumn("__new", F.lit(True)))
-
-    # single-parse SQL band melt (same py4j-build-cost treatment as
-    # simhash_near_duplicates / framewise_hamming_pairs)
-    struct_arr = ", ".join(
-        f"named_struct('band', {k}, 'bucket', "
-        f"(shiftright(__fp, {k * band_bits}) & {mask}))"
-        for k in range(n_bands)
-    )
-
-    def melt(df: DataFrame, keep: list) -> DataFrame:
+    def side(df: DataFrame, suffix: str, doc: str, extra: list[str]) -> DataFrame:
         return df.select(
-            *keep,
-            F.expr(f"explode(array({struct_arr}))").alias("bb"),
-        ).select(
-            *keep,
-            F.col("bb.band").alias("band"),
-            F.col("bb.bucket").alias("bucket"),
+            F.col("doc_id").alias(doc),
+            *gcols,
+            *[F.col(w).alias(f"{w}{suffix}") for w in wcols],
+            *extra,
+            "band",
+            "bucket",
         )
 
-    a = melt(new, ["doc_id", "__f", "__fp"]).select(
-        F.col("doc_id").alias("new_id"),
-        F.col("__fp").alias("fp_a"),
-        "__f",
-        "band",
-        "bucket",
-    )
-    b_m = melt(union, ["doc_id", "__f", "__fp", "__new"])
-    b_cols = [
-        F.col("doc_id").alias("match_id"),
-        F.col("__fp").alias("fp_b"),
-        F.col("__new").alias("match_in_new"),
-        F.col("__f"),
-        F.col("band"),
-        F.col("bucket"),
-    ]
-    if max_bucket_size is not None:
-        # occupancy over the index+batch union, keyed like the probe
-        # join; the a side (new ⊆ union) needs no filter of its own —
-        # dropping the oversized b rows empties the band's join output,
-        # and the canonical test reads the b side's vector (a colliding
-        # pair shares the bucket, hence the size)
-        sizes = b_m.groupBy("__f", "band", "bucket").agg(
-            F.count(F.lit(1)).alias("__bn")
-        )
-        with_bn = b_m.join(sizes, ["__f", "band", "bucket"])
-        bnvec = with_bn.groupBy("doc_id", "__f").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("band", "__bn"))),
-                lambda s: s["__bn"],
-            ).alias("bv_b")
-        )
-        b_m = (
-            with_bn.filter(F.col("__bn") <= max_bucket_size)
-            .join(bnvec, ["doc_id", "__f"])
-        )
-        b_cols.append(F.col("bv_b"))
-    b = b_m.select(*b_cols)
-    fbo = "true"
-    for j in range(n_bands):
-        eq_j = (
-            f"((shiftright(fp_a, {j * band_bits}) & {mask}) = "
-            f"(shiftright(fp_b, {j * band_bits}) & {mask}))"
-        )
-        earlier = f"((band > {j}) AND {eq_j})"
-        if max_bucket_size is not None:
-            earlier = f"({earlier} AND (bv_b[{j}] <= {max_bucket_size}))"
-        fbo = f"({fbo} AND (NOT {earlier}))"
-    frame_matches = (
-        a.join(b, ["__f", "band", "bucket"])
-        .filter(F.col("new_id") != F.col("match_id"))
-        .filter(F.expr(fbo))
-        .filter(
-            F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-            <= F.lit(max_hamming)
-        )
-        .select("new_id", "match_id", "match_in_new", "__f")
-    )
-    return (
-        frame_matches.groupBy("new_id", "match_id", "match_in_new")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_frames_matched"))
-        .filter(F.col("n_frames_matched") >= min_frames)
-        .select("new_id", "match_id", "n_frames_matched", "match_in_new")
-    )
+    a = side(a_m, "a", ids[0], [])
+    b = side(b_m, "b", ids[1], [*tag, *bv])
 
-
-def multiword_hamming_matches(
-    existing: DataFrame,
-    new: DataFrame,
-    *,
-    n_words: int,
-    word_bits: int,
-    band_bits: int,
-    max_hamming: int = 4,
-    bits: int | None = None,
-) -> DataFrame:
-    """Probe NEW multi-word fingerprints against a persisted index PLUS
-    the new batch itself — the incremental companion of
-    :func:`multiword_hamming_pairs` (mirrors what
-    ``incremental_near_duplicates`` is to ``minhash_near_duplicates``).
-    Both inputs are (doc_id, w0 .. w{n-1}); candidates share an exact
-    band between a NEW fingerprint and any index-or-batch fingerprint
-    (self excluded), the verify is the full summed-xor hamming, and the
-    canonical-band (no-earlier-band-matches) test keeps one row per
-    ordered (new_id, match_id) with no distinct shuffle. Unlike the
-    batch join there is NO ``doc_a < doc_b`` cut: a verdict is per NEW
-    doc, so a new-new family pair appears in both directions (each
-    member sees its mate). Per-epoch work is (batch bands) × (index
-    bucket occupancy) — the index side carries only narrow
-    ``1 + n_words`` BIGINT rows.
-
-    ``bits`` is the fingerprint's real width, exactly as in
-    :func:`multiword_hamming_pairs`: bands lying entirely in zero
-    padding (constant bucket 0) are skipped on both the melt and the
-    canonical-band test — otherwise a padded fingerprint would put
-    every doc in one bucket for those bands and silently degenerate the
-    probe toward all-pairs — and the pigeonhole check binds on the
-    SURVIVING band count.
-
-    Output: (new_id, match_id, hamming, match_in_new)."""
-    bpw, n_bands, bits, mask = _multiword_band_layout(
-        n_words=n_words,
-        word_bits=word_bits,
-        band_bits=band_bits,
-        bits=bits,
-        max_hamming=max_hamming,
-    )
-    wcols = [f"w{i}" for i in range(n_words)]
-    new = tracked_persist(new)
-    union = existing.select(
-        "doc_id", *wcols, F.lit(False).alias("__new")
-    ).unionByName(new.select("doc_id", *wcols, F.lit(True).alias("__new")))
-
-    # single-parse SQL band melt (same py4j-build-cost treatment as
-    # simhash_near_duplicates / multiword_hamming_pairs)
-    struct_arr = ", ".join(
-        f"named_struct('band', {b}, 'bucket', "
-        f"(shiftright(w{b // bpw}, {band_bits * (b % bpw)}) & {mask}))"
-        for b in range(n_bands)
-    )
-
-    def melt(df: DataFrame, keep: list) -> DataFrame:
-        return df.select(
-            *keep,
-            F.expr(f"explode(array({struct_arr}))").alias("bb"),
-        ).select(
-            *keep,
-            F.col("bb.band").alias("band"),
-            F.col("bb.bucket").alias("bucket"),
-        )
-
-    a = melt(new, ["doc_id", *wcols]).select(
-        F.col("doc_id").alias("new_id"),
-        *[F.col(w).alias(f"{w}a") for w in wcols],
-        "band",
-        "bucket",
-    )
-    b = melt(union, ["doc_id", *wcols, "__new"]).select(
-        F.col("doc_id").alias("match_id"),
-        *[F.col(w).alias(f"{w}b") for w in wcols],
-        F.col("__new").alias("match_in_new"),
-        "band",
-        "bucket",
-    )
+    # canonical band: keep a joined row only when NO EARLIER band also
+    # matches (with a cap, an earlier band counts only if its bucket was
+    # kept), so each pair survives exactly once and the distinct
+    # exchange is gone from the plan (pinned by test_round2_fixes)
     fbo = "true"
     for j in range(n_bands):
         sh = band_bits * (j % bpw)
-        eq_j = (
-            f"((shiftright(w{j // bpw}a, {sh}) & {mask}) = "
-            f"(shiftright(w{j // bpw}b, {sh}) & {mask}))"
+        word = f"w{j // bpw}"
+        earlier = (
+            f"((band > {j}) AND ((shiftright({word}a, {sh}) & {mask}) = "
+            f"(shiftright({word}b, {sh}) & {mask})))"
         )
-        fbo = f"({fbo} AND (NOT ((band > {j}) AND {eq_j})))"
+        if bv:
+            earlier = f"({earlier} AND (bv[{j}] <= {max_bucket_size}))"
+        fbo = f"({fbo} AND (NOT {earlier}))"
+
     ham_sql = " + ".join(f"bit_count({w}a ^ {w}b)" for w in wcols)
-    hamming = F.expr(f"CAST((0 + {ham_sql}) AS INT)")
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("new_id") != F.col("match_id"))
+    id_a, id_b = F.col(ids[0]), F.col(ids[1])
+    pairs = (
+        a.join(b, keys)
+        .filter(id_a < id_b if index is None else id_a != id_b)
         .filter(F.expr(fbo))
         .select(
-            "new_id",
-            "match_id",
-            hamming.alias("hamming"),
-            "match_in_new",
+            *ids,
+            *gcols,
+            F.expr(f"CAST((0 + {ham_sql}) AS INT)").alias("hamming"),
+            *tag,
         )
         .filter(F.col("hamming") <= max_hamming)
+    )
+    if min_group_matches is None:
+        return pairs
+    return (
+        pairs.groupBy(*ids, *tag)
+        .agg(F.count(F.lit(1)).cast("long").alias("n_frames_matched"))
+        .filter(F.col("n_frames_matched") >= min_group_matches)
+        .select(*ids, "n_frames_matched", *tag)
     )
 
 
@@ -1442,7 +1004,7 @@ def tune_hamming_band_bits(
 
     ``word_bits`` (the multi-word path) additionally requires
     ``band_bits`` to divide the word so a band never straddles words
-    (:func:`multiword_hamming_pairs`' contract).
+    (:func:`hamming_pairs`' contract).
 
     Raises ValueError when even the widest admissible band saturates —
     the caller must move to a wider fingerprint (more bits/words, e.g.

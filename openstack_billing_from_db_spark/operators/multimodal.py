@@ -291,8 +291,8 @@ def dhash_images(
     BIGINT (media.dhash_pixels). Arrow-batched mapInPandas — the
     decode+hash is embarrassingly parallel and the output is one narrow
     (doc_id, dhash) row per image, so the expensive pixel data never
-    shuffles. Feed the result to dedup.simhash_near_duplicates
-    (bits=grid·(grid−1)) for hamming-banded near-duplicate pairs —
+    shuffles. Feed the result (as ``w0``) to dedup.hamming_pairs
+    (word_bits=grid·(grid−1)) for hamming-banded near-duplicate pairs —
     dHash and SimHash share the banded-hamming join kernel."""
 
     if grid * (grid - 1) > 63:
@@ -323,7 +323,7 @@ def dhash_multiword_images(
     decode + pool exactly like :func:`dhash_images`, but with
     ``grid·(grid−1)`` bits (72 at the default grid=9) split into
     sign-safe BIGINT words (media.dhash_words). Feed the result to
-    dedup.multiword_hamming_pairs with band_bits dividing word_bits —
+    dedup.hamming_pairs with band_bits dividing word_bits —
     wider bands mean exponentially more buckets per band (4096 at 12
     bits vs 256 at 8), which is what defers the banded join's bucket
     saturation from ~10⁵ to ~10⁶⁺ images while 6 bands > max_hamming=4
@@ -435,7 +435,7 @@ def phash_near_duplicates(
     past that (``max_mean_bucket · 2^11`` docs — 262k at the
     empirically-anchored default, see tune_hamming_band_bits) the
     W-word wide-mesh ladder takes over: the 9×9 / 72-bit two-word path
-    (q142's shape, dedup.multiword_hamming_pairs) with its own tuned
+    (q142's shape, dedup.hamming_pairs over two words) with its own tuned
     width, then — past the two-word 12-bit bands' ceiling (≳524k docs)
     — the 12×12 / 132-bit THREE-word mesh (q161's shape, 22-bit bands,
     2²² buckets per band: single-join headroom to ~537M docs). Only if
@@ -463,18 +463,15 @@ def phash_near_duplicates(
         )
     except ValueError:
         def _image_level(grid: int, word_bits: int):
-            bits = grid * (grid - 1)
-            n_words = -(-bits // word_bits)
             return (
-                bits,
+                grid * (grid - 1),
                 word_bits,
                 lambda d, pc: dhash_multiword_images(
                     d, pc, grid=grid, word_bits=word_bits
                 ),
                 lambda band_bits: lambda subset: (
-                    dedup.multiword_hamming_pairs(
+                    dedup.hamming_pairs(
                         subset,
-                        n_words=n_words,
                         word_bits=word_bits,
                         band_bits=band_bits,
                         max_hamming=max_hamming,
@@ -495,9 +492,9 @@ def phash_near_duplicates(
             max_mean_bucket=max_mean_bucket,
         )
     fp = dhash_images(df, payload_col, grid=8)
-    return dedup.simhash_near_duplicates(
-        fp.select("doc_id", F.col("dhash").alias("simhash")),
-        bits=8 * 7,
+    return dedup.hamming_pairs(
+        fp.select("doc_id", F.col("dhash").alias("w0")),
+        word_bits=8 * 7,
         band_bits=band_bits,
         max_hamming=max_hamming,
     )
@@ -517,7 +514,7 @@ def audio_near_duplicates(
     pairs at the width dedup.tune_hamming_band_bits picks for the
     corpus size. Past the 56-bit tuner's occupancy bound (~262k clips
     at the default) the 73-frame / 72-bit two-word wide mesh
-    (:func:`audio_dhash_multiword`, dedup.multiword_hamming_pairs)
+    (:func:`audio_dhash_multiword`, dedup.hamming_pairs over two words)
     takes over with its own tuned width — the same escalation contract
     as the image grid=8 → grid=9 path (a finer mesh sees 72 bits of
     temporal texture instead of 56, so pair sets differ at the
@@ -541,7 +538,6 @@ def audio_near_duplicates(
     except ValueError:
         def _audio_level(n_frames: int, word_bits: int):
             bits = n_frames - 1
-            n_words = -(-bits // word_bits)
             return (
                 bits,
                 word_bits,
@@ -549,9 +545,8 @@ def audio_near_duplicates(
                     d, pc, n_frames=n_frames, word_bits=word_bits
                 ),
                 lambda band_bits: lambda subset: (
-                    dedup.multiword_hamming_pairs(
+                    dedup.hamming_pairs(
                         subset,
-                        n_words=n_words,
                         word_bits=word_bits,
                         band_bits=band_bits,
                         max_hamming=max_hamming,
@@ -573,9 +568,9 @@ def audio_near_duplicates(
             max_mean_bucket=max_mean_bucket,
         )
     fp = audio_dhash(df, payload_col)
-    return dedup.simhash_near_duplicates(
-        fp.select("doc_id", F.col("ahash").alias("simhash")),
-        bits=56,
+    return dedup.hamming_pairs(
+        fp.select("doc_id", F.col("ahash").alias("w0")),
+        word_bits=56,
         band_bits=band_bits,
         max_hamming=max_hamming,
     )
@@ -595,21 +590,20 @@ def video_near_duplicates(
     """Corpus-size-driven video perceptual dedup — frame-majority
     matching over per-frame dHashes: the RVID index walk decodes ONLY
     the ``n_samples`` sampled frames, each gets the 56-bit dHash, and
-    dedup.framewise_hamming_pairs joins banded WITHIN frame position at
-    the tuner's width (the banding keys include the frame, so bucket
-    occupancy is per frame position and the documents-count bound
-    applies per frame). Past the 56-bit tuner's occupancy bound (~262k
+    dedup.hamming_pairs (group_col=frame_idx) joins banded WITHIN frame
+    position at the tuner's width (the banding keys include the frame,
+    so bucket occupancy is per frame position and the documents-count
+    bound applies per frame). Past the 56-bit tuner's occupancy bound (~262k
     clips at the default) the grid=9 / 72-bit two-word per-frame mesh
-    (:func:`video_frame_dhash_multiword`,
-    dedup.framewise_multiword_hamming_pairs) takes over with its own
-    tuned width — the image-family escalation contract; past even the
-    12-bit wide bands (≳524k) the corpus is hash-sharded
-    (dedup.chunked_hamming_pairs at dedup.tune_hamming_chunks' pick)
-    into memory-bounded wide joins with exact recall (a doc's frames
-    all chunk with the doc, so the ≥ min_frames majority stays
-    per-join-local). ``max_bucket_size`` passes through the
-    degenerate-frame skew cap (constant/black frames; under chunking
-    the cap applies per chunk-pair join). Output:
+    (:func:`video_frame_dhash_multiword`, the same kernel over two
+    words) takes over with its own tuned width — the image-family
+    escalation contract; past even the 12-bit wide bands (≳524k) the
+    corpus is hash-sharded (dedup.chunked_hamming_pairs at
+    dedup.tune_hamming_chunks' pick) into memory-bounded wide joins with
+    exact recall (a doc's frames all chunk with the doc, so the ≥
+    min_frames majority stays per-join-local). ``max_bucket_size``
+    passes through the degenerate-frame skew cap (constant/black frames;
+    under chunking the cap applies per chunk-pair join). Output:
     (doc_a, doc_b, n_frames_matched ≥ min_frames)."""
     from . import dedup
 
@@ -624,22 +618,20 @@ def video_near_duplicates(
         )
     except ValueError:
         def _video_level(grid: int, word_bits: int):
-            bits = grid * (grid - 1)
-            n_words = -(-bits // word_bits)
             return (
-                bits,
+                grid * (grid - 1),
                 word_bits,
                 lambda d, pc: video_frame_dhash_multiword(
                     d, pc, n_samples=n_samples, grid=grid, word_bits=word_bits
                 ),
                 lambda band_bits: lambda subset: (
-                    dedup.framewise_multiword_hamming_pairs(
+                    dedup.hamming_pairs(
                         subset,
-                        n_words=n_words,
                         word_bits=word_bits,
                         band_bits=band_bits,
                         max_hamming=max_hamming,
-                        min_frames=min_frames,
+                        group_col="frame_idx",
+                        min_group_matches=min_frames,
                         max_bucket_size=max_bucket_size,
                         persist_input=False,
                     )
@@ -658,12 +650,13 @@ def video_near_duplicates(
             max_mean_bucket=max_mean_bucket,
         )
     fp = video_frame_dhash(df, payload_col, n_samples=n_samples, grid=8)
-    return dedup.framewise_hamming_pairs(
-        fp,
-        bits=8 * 7,
+    return dedup.hamming_pairs(
+        fp.select("doc_id", "frame_idx", F.col("dhash").alias("w0")),
+        word_bits=8 * 7,
         band_bits=band_bits,
         max_hamming=max_hamming,
-        min_frames=min_frames,
+        group_col="frame_idx",
+        min_group_matches=min_frames,
         max_bucket_size=max_bucket_size,
     )
 
@@ -718,8 +711,8 @@ def audio_dhash(
     RIFF parse (media.decode_wav) + media.audio_delta_hash inside
     Arrow-batched mapInPandas — the audio twin of :func:`dhash_images`.
     Output is one narrow (doc_id, ahash) row per clip (PCM never
-    shuffles); feed it to dedup.simhash_near_duplicates — audio and
-    image near-dup share the banded-hamming join kernels."""
+    shuffles); feed it (as ``w0``) to dedup.hamming_pairs — audio and
+    image near-dup share the banded-hamming join kernel."""
     kw = {} if n_frames is None else {"n_frames": n_frames}
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -748,7 +741,7 @@ def audio_dhash_multiword(
     delta rule over a finer ``n_frames`` temporal mesh (72 bits at the
     WIDE_AUDIO_FRAMES default), split into sign-safe BIGINT words
     (media.dhash_words). Feed the result to
-    dedup.multiword_hamming_pairs with band_bits dividing word_bits —
+    dedup.hamming_pairs with band_bits dividing word_bits —
     wider bands defer bucket saturation from ~262k to ~524k+ clips.
     Output: (doc_id, w0, w1, …); PCM never leaves the decode stage."""
     bits = n_frames - 1
@@ -883,7 +876,8 @@ def video_frame_dhash(
     skipped frames never decode, same contract as sample_video_frames),
     BMP-decode only those, dHash each. Output: one narrow
     (doc_id, frame_idx, dhash) row per sampled frame — the input to
-    dedup.framewise_hamming_pairs' frame-majority video dedup."""
+    dedup.hamming_pairs' frame-majority video dedup
+    (group_col=frame_idx)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -919,8 +913,8 @@ def video_frame_dhash_multiword(
     walk (only sampled frames decode) with the ``grid·(grid−1)``-bit
     dHash split into sign-safe BIGINT words — 72 bits / two words at
     the grid=9 default. Output: one narrow (doc_id, frame_idx, w0, …)
-    row per sampled frame — the input to
-    dedup.framewise_multiword_hamming_pairs."""
+    row per sampled frame — the input to dedup.hamming_pairs
+    (group_col=frame_idx)."""
     bits = grid * (grid - 1)
     n_words = -(-bits // word_bits)
     wcols = [f"w{i}" for i in range(n_words)]
@@ -1197,7 +1191,7 @@ def scene_representative_dedup(
     window chain (scene_spans_from_cells) and the rep-frame dHash is
     packed JVM-side from the SAME mesh rows (:func:`mesh_dhash_column`)
     — no second decode, no Python past the map stage. The banded join
-    is dedup.simhash_near_duplicates over ``doc_id·2^20 + scene_idx``
+    is dedup.hamming_pairs over ``doc_id·2^20 + scene_idx``
     entities at the tuner-derived width (``band_bits=None`` sizes it
     from the scene-entity count via dedup.tune_hamming_band_bits; pass
     ``n_entities`` to skip the count job).
@@ -1243,11 +1237,11 @@ def scene_representative_dedup(
         (F.col("doc_id") * SCENE_ENTITY_FACTOR + F.col("scene_idx")).alias(
             "doc_id"
         ),
-        F.col("dhash").alias("simhash"),
+        F.col("dhash").alias("w0"),
     )
-    pairs = dedup.simhash_near_duplicates(
+    pairs = dedup.hamming_pairs(
         entities,
-        bits=grid * (grid - 1),
+        word_bits=grid * (grid - 1),
         band_bits=band_bits,
         max_hamming=max_hamming,
     )

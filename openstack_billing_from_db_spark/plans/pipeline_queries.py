@@ -2112,9 +2112,9 @@ def q141_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-level BMP codec decodes it back inside Arrow-batched
     mapInPandas, media.dhash_pixels pools intensity to an 8×8 mesh and
     packs the 56 horizontal-neighbor comparisons into a BIGINT, and
-    dedup.simhash_near_duplicates — the SAME banded-hamming kernel q37
-    uses, bits=56/band_bits=8 — emits verified pairs at hamming <=
-    {_DH_MAX_HAMMING}. The oracle replays pixel synthesis, pooling
+    dedup.hamming_pairs — the banded-hamming kernel behind q37, here
+    over one 56-bit word at band_bits=8 — emits verified pairs at
+    hamming <= {_DH_MAX_HAMMING}. The oracle replays pixel synthesis, pooling
     (identity on 2×2-constant cells), bit packing, banding, and the
     hamming verify in closed form — any codec, pooling, packing, or
     band-extraction bug hash-fails. Scale shape: pixels never shuffle
@@ -2129,9 +2129,9 @@ def q141_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = multimodal.dhash_images(
         multimodal.synthesize_textured_image_payloads(docs), grid=_DH_GRID
     )
-    return dedup.simhash_near_duplicates(
-        fp.select("doc_id", F.col("dhash").alias("simhash")),
-        bits=_DH_GRID * (_DH_GRID - 1),
+    return dedup.hamming_pairs(
+        fp.select("doc_id", F.col("dhash").alias("w0")),
+        word_bits=_DH_GRID * (_DH_GRID - 1),
         band_bits=8,
         max_hamming=_DH_MAX_HAMMING,
     )
@@ -2208,7 +2208,7 @@ def q142_image_phash72_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     implemented: 18×18 textured BMPs (the same md5 cell texture, grid=9
     superset), byte-level decode in Arrow mapInPandas, 72-bit dHash
     split into two 36-bit BIGINT words (media.dhash_words), pairs via
-    dedup.multiword_hamming_pairs with 6 bands × 12 bits — pigeonhole
+    dedup.hamming_pairs with 6 bands × 12 bits — pigeonhole
     recall guarantee intact (6 > hamming budget 4) with 4096 buckets
     per band (16× q141's 256), deferring banded-join bucket saturation
     by the same factor. The oracle replays synthesis → pooling →
@@ -2220,9 +2220,8 @@ def q142_image_phash72_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid=_DH9_GRID,
         word_bits=_DH9_WORD_BITS,
     )
-    return dedup.multiword_hamming_pairs(
+    return dedup.hamming_pairs(
         fp,
-        n_words=2,
         word_bits=_DH9_WORD_BITS,
         band_bits=_DH9_BAND_BITS,
         max_hamming=_DH_MAX_HAMMING,
@@ -2399,7 +2398,7 @@ def q144_audio_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     media.decode_wav parses it back inside Arrow-batched mapInPandas,
     media.audio_delta_hash sums |PCM| per equal frame and packs the 56
     consecutive-frame comparisons into a BIGINT, and
-    dedup.simhash_near_duplicates — the SAME kernel the image dHash
+    dedup.hamming_pairs — the SAME kernel the image dHash
     path uses (q141/q142), at the width the hamming tuner picks for
     this corpus size — emits verified pairs at hamming ≤ 4. The oracle
     replays frame amplitudes (portable md5 hash family), delta-bit
@@ -2412,9 +2411,9 @@ def q144_audio_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = multimodal.audio_dhash(
         multimodal.synthesize_family_audio_payloads(docs)
     )
-    return dedup.simhash_near_duplicates(
-        fp.select("doc_id", F.col("ahash").alias("simhash")),
-        bits=56,
+    return dedup.hamming_pairs(
+        fp.select("doc_id", F.col("ahash").alias("w0")),
+        word_bits=56,
         band_bits=_AW_BAND_BITS,
         max_hamming=_DH_MAX_HAMMING,
     )
@@ -2512,8 +2511,8 @@ def q145_video_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     container index walk decodes exactly the sampled frames
     (multimodal.video_frame_dhash — skipped frames never decode, the
     100 TB property), each frame gets the q141 dHash, and
-    dedup.framewise_hamming_pairs joins banded WITHIN frame position
-    and keeps pairs matching on >= {_VW_MIN_FRAMES} of 3 frames. The
+    dedup.hamming_pairs (group_col=frame_idx) joins banded WITHIN
+    frame position and keeps pairs matching on >= {_VW_MIN_FRAMES} of 3 frames. The
     fixture's distorted-frame members make the majority rule
     discriminative (family pairs match 3 or 2 frames; the doubly-
     distorted pair matches 1 and is dropped). The oracle replays
@@ -2526,12 +2525,13 @@ def q145_video_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = multimodal.video_frame_dhash(
         multimodal.synthesize_family_video_payloads(docs), n_samples=3
     )
-    return dedup.framewise_hamming_pairs(
-        fp,
-        bits=56,
+    return dedup.hamming_pairs(
+        fp.select("doc_id", "frame_idx", F.col("dhash").alias("w0")),
+        word_bits=56,
         band_bits=_VW_BAND_BITS,
         max_hamming=_DH_MAX_HAMMING,
-        min_frames=_VW_MIN_FRAMES,
+        group_col="frame_idx",
+        min_group_matches=_VW_MIN_FRAMES,
     )
 
 
@@ -2936,7 +2936,7 @@ def q154_audio_phash72_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame aligns with the hash mesh, so intra-family hamming stays ≤
     {_DH_MAX_HAMMING} at the wide width), RIFF decode + 72-bit
     delta-energy hash split into two 36-bit words inside Arrow
-    mapInPandas, pairs via dedup.multiword_hamming_pairs at the
+    mapInPandas, pairs via dedup.hamming_pairs at the
     tuner-derived {_AW9_BAND_BITS}-bit bands. The oracle replays the
     amplitude profile, delta packing into two words, per-word band
     extraction, and the summed-xor verify in closed form. PCM never
@@ -2950,9 +2950,8 @@ def q154_audio_phash72_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_frames=_AW9_FRAMES,
         word_bits=_DH9_WORD_BITS,
     )
-    return dedup.multiword_hamming_pairs(
+    return dedup.hamming_pairs(
         fp,
-        n_words=2,
         word_bits=_DH9_WORD_BITS,
         band_bits=_AW9_BAND_BITS,
         max_hamming=_DH_MAX_HAMMING,
@@ -3009,8 +3008,8 @@ def q155_video_phash72_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered on its own fixture: 18×18 family frames (exact 2×2-cell
     pooling at grid 9 — the synth_textured_pixels superset contract),
     RVID index walk decoding only sampled frames, per-frame two-word
-    dHash, pairs via dedup.framewise_multiword_hamming_pairs (the
-    multiword kernel frame-scoped through group_col) at the
+    dHash, pairs via dedup.hamming_pairs (frame-scoped through
+    group_col, majority through min_group_matches) at the
     tuner-derived {_VW9_BAND_BITS}-bit bands with the ≥
     {_VW_MIN_FRAMES}-of-3 majority gate. The oracle replays texture →
     per-frame two-word packing → EXACT all-pairs frame matches (banding
@@ -3023,13 +3022,13 @@ def q155_video_phash72_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid=_VW9_GRID,
         word_bits=_DH9_WORD_BITS,
     )
-    return dedup.framewise_multiword_hamming_pairs(
+    return dedup.hamming_pairs(
         fp,
-        n_words=2,
         word_bits=_DH9_WORD_BITS,
         band_bits=_VW9_BAND_BITS,
         max_hamming=_DH_MAX_HAMMING,
-        min_frames=_VW_MIN_FRAMES,
+        group_col="frame_idx",
+        min_group_matches=_VW_MIN_FRAMES,
     )
 
 
@@ -3051,7 +3050,7 @@ def q156_chunked_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The round-11 sharding escalation under the driver gate: the
     two-word fingerprints are hash-sharded at dedup.tune_hamming_chunks'
     600k-doc pick (3 chunks, 12-bit bands) and joined per chunk pair by
-    dedup.chunked_hamming_pairs — 6 multiword joins whose union is
+    dedup.chunked_hamming_pairs — 6 two-word joins whose union is
     pinned ≡ the single-pass wide join by the oracle (q142's
     closed-form replay; exact recall makes the two plans
     output-identical on any input). Measured 31.1 s at 1M synthetic
@@ -3075,9 +3074,8 @@ def q156_chunked_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return dedup.chunked_hamming_pairs(
         fp,
-        lambda subset: dedup.multiword_hamming_pairs(
+        lambda subset: dedup.hamming_pairs(
             subset,
-            n_words=2,
             word_bits=_DH9_WORD_BITS,
             band_bits=band_bits,
             max_hamming=_DH_MAX_HAMMING,
@@ -3459,7 +3457,7 @@ def q161_image_phash132_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale lever (VERDICT r11 Next #4): 24×24 textured BMPs (the same
     md5 cell texture, grid=12 superset), byte-level decode in Arrow
     mapInPandas, 132-bit dHash split into three 44-bit BIGINT words
-    (media.dhash_words), pairs via dedup.multiword_hamming_pairs at
+    (media.dhash_words), pairs via dedup.hamming_pairs at
     the tuner-derived 22-bit bands — pigeonhole recall intact (6 bands
     > hamming budget 4) with 2^22 buckets per band (1024× q142's
     4096), deferring single-join bucket saturation from ~524k to
@@ -3475,9 +3473,8 @@ def q161_image_phash132_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid=_DH12_GRID,
         word_bits=_DH12_WORD_BITS,
     )
-    return dedup.multiword_hamming_pairs(
+    return dedup.hamming_pairs(
         fp,
-        n_words=3,
         word_bits=_DH12_WORD_BITS,
         band_bits=_DH12_BAND_BITS,
         max_hamming=_DH_MAX_HAMMING,
@@ -3692,7 +3689,7 @@ def q164_audio_phash132_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain: real RIFF/WAV clips on the 133-frame family fixture
     (aligned to the 16-sample frame grid), decode + delta-energy hash
     in Arrow mapInPandas, 132 bits split into three 44-bit words
-    (media.dhash_words), pairs via dedup.multiword_hamming_pairs at
+    (media.dhash_words), pairs via dedup.hamming_pairs at
     the tuner-derived {_AW12_BAND_BITS}-bit bands (6 bands > hamming
     budget 4 keeps pigeonhole recall; 2^22 buckets per band). The
     oracle replays amplitudes → delta bits → three-word packing →
@@ -3705,9 +3702,8 @@ def q164_audio_phash132_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = multimodal.audio_dhash_multiword(
         pay, n_frames=_AW12_FRAMES, word_bits=_AW12_WORD_BITS
     )
-    return dedup.multiword_hamming_pairs(
+    return dedup.hamming_pairs(
         fp,
-        n_words=3,
         word_bits=_AW12_WORD_BITS,
         band_bits=_AW12_BAND_BITS,
         max_hamming=_DH_MAX_HAMMING,

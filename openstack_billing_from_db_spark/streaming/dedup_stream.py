@@ -114,8 +114,8 @@ def admit_batch(
     # expensive upstream here, and new_idx appears FOUR times in the
     # returned DAG (candidate probe, self-union, verdict domain, additions
     # semi-join) — and a later epoch probing ``additions`` as its index
-    # embeds this epoch's whole chain again. The multiword/framewise
-    # kernels already persist their new side (multiword_hamming_matches /
+    # embeds this epoch's whole chain again. The hamming probe already
+    # persists its new side (dedup.hamming_pairs with an index /
     # admit_video_batch); this is the same discipline for the text path.
     # Released by the registry wrapper / release_persisted_caches().
     new_idx = tracked_persist(
@@ -221,7 +221,6 @@ def _admit_fingerprint_batch(
     new_fp: DataFrame,
     index_dir: str | None,
     *,
-    n_words: int,
     word_bits: int,
     band_bits: int,
     max_hamming: int,
@@ -233,16 +232,14 @@ def _admit_fingerprint_batch(
     persisted index plus the batch itself, admit a doc iff it has NO
     near-dup in the index and NO lower-id near-dup in its own batch
     (min-id canonical survivor — :func:`admit_batch`'s rule). ``bits``
-    is the fingerprint's real width (multiword_hamming_matches skips
+    is the fingerprint's real width (dedup.hamming_pairs skips
     padding-only bands, which would otherwise bucket every doc
     together). ``existing_index`` supplies the index as a DataFrame
     directly (``index_dir`` then unused) — the hook that lets a
     registered query replay a multi-epoch admission through this
     function under the driver's oracle gate (the admit_video_batch /
     q153 pattern)."""
-    from openstack_billing_from_db_spark.operators.dedup import (
-        multiword_hamming_matches,
-    )
+    from openstack_billing_from_db_spark.operators.dedup import hamming_pairs
 
     if existing_index is None and index_dir is None:
         # _existing_index swallows read failures by design (first epoch
@@ -256,10 +253,9 @@ def _admit_fingerprint_batch(
         if existing_index is not None
         else _existing_index(spark, index_dir, new_fp)
     )
-    matches = multiword_hamming_matches(
-        existing,
+    matches = hamming_pairs(
         new_fp,
-        n_words=n_words,
+        index=existing,
         word_bits=word_bits,
         band_bits=band_bits,
         max_hamming=max_hamming,
@@ -311,8 +307,6 @@ def admit_image_batch(
     never leave the decode map stage, ~24 B/doc state."""
     from openstack_billing_from_db_spark.operators import multimodal
 
-    bits = grid * (grid - 1)
-    n_words = -(-bits // word_bits)
     new_fp = multimodal.dhash_multiword_images(
         batch_pay, grid=grid, word_bits=word_bits
     )
@@ -320,11 +314,10 @@ def admit_image_batch(
         spark,
         new_fp,
         index_dir,
-        n_words=n_words,
         word_bits=word_bits,
         band_bits=band_bits,
         max_hamming=max_hamming,
-        bits=bits,
+        bits=grid * (grid - 1),
         existing_index=existing_index,
     )
 
@@ -368,7 +361,6 @@ def admit_audio_batch(
         spark,
         new_fp,
         index_dir,
-        n_words=1,
         word_bits=56,
         band_bits=band_bits,
         max_hamming=max_hamming,
@@ -393,13 +385,13 @@ def admit_video_batch(
     """One video micro-batch against the persisted PER-FRAME fingerprint
     index: RVID index walk decodes only the ``n_samples`` sampled frames
     (skipped frames never decode — q145's scale property), each frame
-    gets a dHash, and :func:`dedup.framewise_hamming_matches` probes the
-    index plus the batch itself with the frame-majority gate (a match
-    needs ≥ ``min_frames`` of the sampled positions at hamming ≤
-    ``max_hamming``). Admission is the shared min-id-canonical rule: a
-    clip enters iff it has NO majority-match in the index and NO
-    lower-id majority-match in its own batch. Index state:
-    (doc_id, frame_idx, dhash) ≈ 24 B/frame-row — video bytes never
+    gets a dHash, and :func:`dedup.hamming_pairs` (grouped by frame,
+    with an index) probes the index plus the batch itself with the
+    frame-majority gate (a match needs ≥ ``min_frames`` of the sampled
+    positions at hamming ≤ ``max_hamming``). Admission is the shared
+    min-id-canonical rule: a clip enters iff it has NO majority-match in
+    the index and NO lower-id majority-match in its own batch. Index
+    state: (doc_id, frame_idx, dhash) ≈ 24 B/frame-row — video bytes never
     leave the decode map stage. Returns ``(verdicts, additions)``;
     ``verdicts`` is (doc_id, n_matches, best_frames_matched, admitted),
     ``additions`` the per-frame fingerprint rows to fold in.
@@ -409,11 +401,9 @@ def admit_video_batch(
     query (q153) replay a multi-epoch admission through THIS function
     under the driver's oracle gate instead of a filesystem stream."""
     from openstack_billing_from_db_spark.operators import multimodal
-    from openstack_billing_from_db_spark.operators.dedup import (
-        framewise_hamming_matches,
-    )
+    from openstack_billing_from_db_spark.operators.dedup import hamming_pairs
 
-    # persist BEFORE framewise_hamming_matches caches its own projection
+    # persist BEFORE hamming_pairs caches its own projection
     # of this plan: the inner tracked_persist captures its physical plan
     # at call time, so persisting here lets it read the decoded frames
     # from this cache instead of running the RVID decode a second time
@@ -429,13 +419,15 @@ def admit_video_batch(
         if existing_index is not None
         else _existing_index(spark, index_dir, new_fp)
     )
-    matches = framewise_hamming_matches(
-        existing,
-        new_fp,
-        bits=grid * (grid - 1),
+    fp_cols = ["doc_id", "frame_idx", F.col("dhash").alias("w0")]
+    matches = hamming_pairs(
+        new_fp.select(*fp_cols),
+        index=existing.select(*fp_cols),
+        word_bits=grid * (grid - 1),
         band_bits=band_bits,
         max_hamming=max_hamming,
-        min_frames=min_frames,
+        group_col="frame_idx",
+        min_group_matches=min_frames,
         max_bucket_size=max_bucket_size,
     )
     blocking = F.when(

@@ -3,7 +3,7 @@
 three-word fingerprints (the same planted-truth design as the r11 1M-doc
 chunked 72-bit probe — 5-member families, each member one flipped w0
 bit, so every family pair sits at hamming 2 and truth = 10·N/5 pairs),
-run dedup.multiword_hamming_pairs at the tuner's band width, and check
+run dedup.hamming_pairs at the tuner's band width, and check
 the output against the planted truth exactly.
 
 The point being demonstrated: corpora that the two-word path could only
@@ -64,9 +64,8 @@ fp = spark.range(N).select(
 t0 = time.perf_counter()
 pairs = dedup.chunked_hamming_pairs(
     fp,
-    lambda subset: dedup.multiword_hamming_pairs(
+    lambda subset: dedup.hamming_pairs(
         subset,
-        n_words=3,
         word_bits=WORD_BITS,
         band_bits=band_bits,
         max_hamming=4,

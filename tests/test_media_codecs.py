@@ -390,15 +390,13 @@ def test_dhash_grid9_two_words_and_superset(spark):
         media.dhash_words(h9, bits=72, word_bits=64)
 
 
-def test_multiword_hamming_pairs_matches_bruteforce(spark):
-    """The banded multi-word join finds EXACTLY the brute-force
+def test_hamming_pairs_two_words_matches_bruteforce(spark):
+    """The banded two-word join finds EXACTLY the brute-force
     hamming <= 4 pairs whenever n_bands > max_hamming (pigeonhole)."""
     import itertools
     import random
 
-    from openstack_billing_from_db_spark.operators.dedup import (
-        multiword_hamming_pairs,
-    )
+    from openstack_billing_from_db_spark.operators.dedup import hamming_pairs
 
     rng = random.Random(11)
     base = rng.getrandbits(72)
@@ -415,8 +413,8 @@ def test_multiword_hamming_pairs_matches_bruteforce(spark):
     df = spark.createDataFrame(rows, "doc_id long, w0 long, w1 long")
     got = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in multiword_hamming_pairs(
-            df, n_words=2, word_bits=36, band_bits=12, max_hamming=4
+        for r in hamming_pairs(
+            df, word_bits=36, band_bits=12, max_hamming=4
         ).collect()
     }
     want = {
@@ -426,10 +424,10 @@ def test_multiword_hamming_pairs_matches_bruteforce(spark):
     }
     assert got == want
 
-    import pytest
-
-    with pytest.raises(ValueError):
-        multiword_hamming_pairs(df, n_words=2, word_bits=36, band_bits=10)
+    with pytest.raises(ValueError, match="divide"):
+        hamming_pairs(df, word_bits=36, band_bits=10)
+    with pytest.raises(ValueError, match="w0"):
+        hamming_pairs(df.select("doc_id", "w1"), word_bits=36, band_bits=12)
 
 
 def test_dhash_multiword_images_spark_matches_local(spark):
@@ -485,8 +483,8 @@ def test_single_word_non_divisor_bands(spark):
     so non-divisor widths are legal and reproduce the single-word
     kernel's banding — the 56-bit audio fingerprint probes at the
     batch path's tuner-derived 11-bit bands (5 bands > max_hamming=4).
-    The multiword kernels at (n_words=1, band_bits=11) must emit the
-    same pairs as simhash_near_duplicates at band_bits=11."""
+    hamming_pairs over one word at band_bits=11 must emit the same
+    pairs as simhash_near_duplicates at band_bits=11."""
     from openstack_billing_from_db_spark.operators import dedup
 
     docs = spark.createDataFrame([(i,) for i in range(30)], "doc_id long")
@@ -504,9 +502,8 @@ def test_single_word_non_divisor_bands(spark):
     }
     got = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in dedup.multiword_hamming_pairs(
+        for r in dedup.hamming_pairs(
             fp.select("doc_id", F.col("ahash").alias("w0")),
-            n_words=1,
             word_bits=56,
             band_bits=11,
             max_hamming=4,
@@ -516,27 +513,25 @@ def test_single_word_non_divisor_bands(spark):
     assert got == want and got
     # multi-word fingerprints still require the divisor (straddle guard)
     with pytest.raises(ValueError, match="divide"):
-        dedup.multiword_hamming_pairs(
+        dedup.hamming_pairs(
             fp.select(
                 "doc_id",
                 F.col("ahash").alias("w0"),
                 F.lit(0).alias("w1"),
             ),
-            n_words=2,
             word_bits=36,
             band_bits=11,
         )
     # band wider than the word refuses
     with pytest.raises(ValueError, match="wider than word_bits"):
-        dedup.multiword_hamming_pairs(
+        dedup.hamming_pairs(
             fp.select("doc_id", F.col("ahash").alias("w0")),
-            n_words=1,
             word_bits=56,
             band_bits=60,
         )
 
 
-def test_multiword_hamming_pairs_padding_bands(spark):
+def test_hamming_pairs_padding_bands(spark):
     """ADVICE r8: fingerprints narrower than n_words*word_bits leave
     all-zero padding bands that would bucket EVERY doc together. With
     ``bits`` given, padding bands are skipped (output still exactly the
@@ -544,9 +539,7 @@ def test_multiword_hamming_pairs_padding_bands(spark):
     import itertools
     import random
 
-    from openstack_billing_from_db_spark.operators.dedup import (
-        multiword_hamming_pairs,
-    )
+    from openstack_billing_from_db_spark.operators.dedup import hamming_pairs
 
     rng = random.Random(7)
     base = rng.getrandbits(60)
@@ -560,9 +553,8 @@ def test_multiword_hamming_pairs_padding_bands(spark):
     df = spark.createDataFrame(rows, "doc_id long, w0 long, w1 long")
     got = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in multiword_hamming_pairs(
-            df, n_words=2, word_bits=36, band_bits=12, max_hamming=4,
-            bits=60,
+        for r in hamming_pairs(
+            df, word_bits=36, band_bits=12, max_hamming=4, bits=60,
         ).collect()
     }
     want = {
@@ -574,13 +566,9 @@ def test_multiword_hamming_pairs_padding_bands(spark):
     # 48 real bits at 12-bit bands = 4 non-padding bands: pigeonhole
     # coverage of max_hamming=4 is gone -> refuse, don't under-recall
     with pytest.raises(ValueError, match="pigeonhole"):
-        multiword_hamming_pairs(
-            df, n_words=2, word_bits=36, band_bits=12, bits=48
-        )
+        hamming_pairs(df, word_bits=36, band_bits=12, bits=48)
     with pytest.raises(ValueError, match="bits"):
-        multiword_hamming_pairs(
-            df, n_words=2, word_bits=36, band_bits=12, bits=80
-        )
+        hamming_pairs(df, word_bits=36, band_bits=12, bits=80)
 
 
 def test_phash_near_duplicates_selects_by_corpus_size(spark):
@@ -617,9 +605,8 @@ def test_phash_near_duplicates_selects_by_corpus_size(spark):
     # past the single-word boundary -> 72-bit two-word wide bands
     got_big = pairs(multimodal.phash_near_duplicates(pay, n_docs=300_000))
     want_big = pairs(
-        dedup.multiword_hamming_pairs(
+        dedup.hamming_pairs(
             multimodal.dhash_multiword_images(pay, grid=9, word_bits=36),
-            n_words=2,
             word_bits=36,
             band_bits=12,
             max_hamming=4,
@@ -634,9 +621,8 @@ def test_phash_near_duplicates_selects_by_corpus_size(spark):
     # family pairs drift past hamming 4 — the ladder output must equal
     # the explicit three-word kernel, margin drift included.
     want_3w = pairs(
-        dedup.multiword_hamming_pairs(
+        dedup.hamming_pairs(
             multimodal.dhash_multiword_images(pay, grid=12, word_bits=44),
-            n_words=3,
             word_bits=44,
             band_bits=22,
             max_hamming=4,
@@ -695,9 +681,7 @@ def test_video_family_frame_majority(spark):
     frame-majority rule: undistorted member pairs match 3 frames,
     pairs touching one distorted frame match 2, and the
     (var=3, var=4) doubly-distorted pair is dropped."""
-    from openstack_billing_from_db_spark.operators.dedup import (
-        framewise_hamming_pairs,
-    )
+    from openstack_billing_from_db_spark.operators.dedup import hamming_pairs
 
     docs = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
     fp = multimodal.video_frame_dhash(
@@ -705,8 +689,10 @@ def test_video_family_frame_majority(spark):
     )
     got = {
         (r.doc_a, r.doc_b): r.n_frames_matched
-        for r in framewise_hamming_pairs(
-            fp, bits=56, band_bits=11, max_hamming=4, min_frames=2
+        for r in hamming_pairs(
+            fp.select("doc_id", "frame_idx", F.col("dhash").alias("w0")),
+            word_bits=56, band_bits=11, max_hamming=4,
+            group_col="frame_idx", min_group_matches=2,
         ).collect()
     }
     for fam_base in (0, 5):
@@ -730,59 +716,96 @@ def test_video_family_frame_majority(spark):
             assert out[(i, f)] == media.dhash_pixels(frames[f])
 
 
-def test_multiword_hamming_matches_padding_bands(spark):
-    """ADVICE r9: the streaming probe twin of multiword_hamming_pairs
-    honors the same ``bits`` real-width contract — padding bands (which
-    would put every doc in bucket 0 and degenerate the probe toward
-    all-pairs) are skipped, output still exactly the brute-force
-    matches, and losing pigeonhole coverage is a hard error."""
+# per word count: (word_bits, band_bits, bits, bits leaving only 4 bands)
+_PROBE_GEOMETRY = {1: (60, 10, 50, 40), 2: (36, 12, 60, 48)}
+
+
+@pytest.mark.parametrize("n_words", [1, 2])
+def test_hamming_pairs_probe_padding_bands(spark, n_words):
+    """ADVICE r9: the streaming probe (hamming_pairs with an index)
+    honors the same ``bits`` real-width contract as the batch join —
+    padding bands (which would put every doc in bucket 0 and degenerate
+    the probe toward all-pairs) are skipped, output is exactly the
+    brute-force matches, each emitted once, with or without a bucket
+    cap, and losing pigeonhole coverage is a hard error."""
     import random
 
-    from openstack_billing_from_db_spark.operators.dedup import (
-        multiword_hamming_matches,
-    )
+    from openstack_billing_from_db_spark.operators.dedup import hamming_pairs
 
+    word_bits, band_bits, bits, short_bits = _PROBE_GEOMETRY[n_words]
+    bpw = word_bits // band_bits
+    n_bands = -(-bits // band_bits)  # the non-padding bands
     rng = random.Random(13)
-    base = rng.getrandbits(60)
+    base = rng.getrandbits(bits)
     fps = {}
     for i in range(30):
-        h = base if i % 3 == 0 else rng.getrandbits(60)
+        h = base if i % 3 == 0 else rng.getrandbits(bits)
         for _ in range(rng.randrange(0, 7)):
-            h ^= 1 << rng.randrange(60)
+            h ^= 1 << rng.randrange(bits)
         fps[i] = h
-    rows = [(i, h & ((1 << 36) - 1), h >> 36) for i, h in fps.items()]
-    existing = spark.createDataFrame(
-        [r for r in rows if r[0] < 20], "doc_id long, w0 long, w1 long"
-    )
-    new = spark.createDataFrame(
-        [r for r in rows if r[0] >= 20], "doc_id long, w0 long, w1 long"
-    )
-    got = {
-        (r.new_id, r.match_id): (r.hamming, r.match_in_new)
-        for r in multiword_hamming_matches(
-            existing, new, n_words=2, word_bits=36, band_bits=12,
-            max_hamming=4, bits=60,
+    wmask, mask = (1 << word_bits) - 1, (1 << band_bits) - 1
+    rows = [
+        (i, *[(h >> (k * word_bits)) & wmask for k in range(n_words)])
+        for i, h in fps.items()
+    ]
+    schema = "doc_id long, " + ", ".join(f"w{k} long" for k in range(n_words))
+    existing = spark.createDataFrame([r for r in rows if r[0] < 20], schema)
+    new = spark.createDataFrame([r for r in rows if r[0] >= 20], schema)
+
+    def buckets(h):
+        return [
+            (h >> (word_bits * (k // bpw) + band_bits * (k % bpw))) & mask
+            for k in range(n_bands)
+        ]
+
+    occ = {}  # occupancy over index + batch, like the kernel's cap
+    for h in fps.values():
+        for k, v in enumerate(buckets(h)):
+            occ[(k, v)] = occ.get((k, v), 0) + 1
+
+    def brute(cap):
+        out = {}
+        for a in range(20, 30):
+            for b in range(30):
+                ham = bin(fps[a] ^ fps[b]).count("1")
+                if a == b or ham > 4:
+                    continue
+                ba, bb = buckets(fps[a]), buckets(fps[b])
+                if any(
+                    ba[k] == bb[k] and (cap is None or occ[(k, ba[k])] <= cap)
+                    for k in range(n_bands)
+                ):
+                    out[(a, b)] = (ham, b >= 20)
+        return out
+
+    for cap in (None, 6):
+        rows_out = hamming_pairs(
+            new, index=existing, word_bits=word_bits, band_bits=band_bits,
+            max_hamming=4, bits=bits, max_bucket_size=cap,
         ).collect()
-    }
-    want = {
-        (a, b): (bin(fps[a] ^ fps[b]).count("1"), b >= 20)
-        for a in range(20, 30)
-        for b in range(30)
-        if a != b and bin(fps[a] ^ fps[b]).count("1") <= 4
-    }
-    assert got == want and got  # fixture guarantees matches exist
+        got = {
+            (r.new_id, r.match_id): (r.hamming, r.match_in_new)
+            for r in rows_out
+        }
+        assert len(rows_out) == len(got)  # exactly-once emission
+        assert got == brute(cap), cap
+    # the fixture exercises what it claims: matches exist, and the cap
+    # drops some of them without dropping all
+    assert 0 < len(brute(6)) < len(brute(None))
 
     with pytest.raises(ValueError, match="pigeonhole"):
-        multiword_hamming_matches(
-            existing, new, n_words=2, word_bits=36, band_bits=12, bits=48
+        hamming_pairs(
+            new, index=existing, word_bits=word_bits, band_bits=band_bits,
+            bits=short_bits,
         )
     with pytest.raises(ValueError, match="bits"):
-        multiword_hamming_matches(
-            existing, new, n_words=2, word_bits=36, band_bits=12, bits=80
+        hamming_pairs(
+            new, index=existing, word_bits=word_bits, band_bits=band_bits,
+            bits=n_words * word_bits + 1,
         )
 
 
-def test_framewise_hamming_pairs_bucket_cap(spark):
+def test_hamming_pairs_grouped_bucket_cap(spark):
     """ADVICE r9: a degenerate frame population (constant/black frames)
     collapses into one (frame, band, bucket) key with quadratic
     candidates; ``max_bucket_size`` drops oversized buckets — a
@@ -791,9 +814,7 @@ def test_framewise_hamming_pairs_bucket_cap(spark):
     counts each surviving (pair, frame) exactly once."""
     import random
 
-    from openstack_billing_from_db_spark.operators.dedup import (
-        framewise_hamming_pairs,
-    )
+    from openstack_billing_from_db_spark.operators.dedup import hamming_pairs
 
     rng = random.Random(3)
     bits, band_bits = 56, 11  # 5 bands, mask per band = 11 bits
@@ -817,7 +838,7 @@ def test_framewise_hamming_pairs_bucket_cap(spark):
 
     df = spark.createDataFrame(
         [(d, f, h) for (d, f), h in fp.items()],
-        "doc_id long, frame_idx int, dhash long",
+        "doc_id long, frame_idx int, w0 long",
     )
 
     def brute(cap):
@@ -856,15 +877,30 @@ def test_framewise_hamming_pairs_bucket_cap(spark):
     for cap, min_frames in ((None, 1), (5, 1), (5, 2)):
         got = {
             (r.doc_a, r.doc_b): r.n_frames_matched
-            for r in framewise_hamming_pairs(
-                df, bits=bits, band_bits=band_bits, max_hamming=4,
-                min_frames=min_frames, max_bucket_size=cap,
+            for r in hamming_pairs(
+                df, word_bits=bits, band_bits=band_bits, max_hamming=4,
+                group_col="frame_idx", min_group_matches=min_frames,
+                max_bucket_size=cap,
             ).collect()
         }
         want = {
             p: n for p, n in brute(cap).items() if n >= min_frames
         }
         assert got == want, (cap, min_frames)
+    # without min_group_matches: one (pair, frame) row per frame match
+    per_frame = [
+        (r.doc_a, r.doc_b, r.frame_idx)
+        for r in hamming_pairs(
+            df, word_bits=bits, band_bits=band_bits, max_hamming=4,
+            group_col="frame_idx", max_bucket_size=5,
+        ).collect()
+    ]
+    assert len(per_frame) == len(set(per_frame))
+    assert {(a, b) for a, b, _ in per_frame} == set(brute(5))
+    for bad in ({"group_col": "frame_idx", "min_group_matches": 0},
+                {"min_group_matches": 2}):
+        with pytest.raises(ValueError, match="min_group_matches"):
+            hamming_pairs(df, word_bits=bits, band_bits=band_bits, **bad)
     # the fixture exercises what it claims: uncapped (0,1) matches all
     # 3 frames; capped drops the black frame but keeps frame 2 via the
     # under-cap bands 1-4 (counted once), so (0,1) -> exactly 2
@@ -872,27 +908,30 @@ def test_framewise_hamming_pairs_bucket_cap(spark):
     assert len(brute(None)) == 45 and len(brute(5)) == 1
 
 
-def test_framewise_hamming_matches_bucket_cap(spark):
+@pytest.mark.parametrize("n_words", [1, 2])
+def test_hamming_pairs_probe_bucket_cap(spark, n_words):
     """The streaming probe gets the same degenerate-frame skew cap as
     its batch twin: black frames accumulate in the persisted index, so
     without the cap each batch's black frames join the whole index.
     Capped, a frame match survives only via an under-cap band; the
     majority count still counts each (new, match, frame) exactly once."""
-    from openstack_billing_from_db_spark.operators.dedup import (
-        framewise_hamming_matches,
-    )
+    from openstack_billing_from_db_spark.operators.dedup import hamming_pairs
 
-    bits, band_bits = 56, 11
+    # one 56-bit word (5 bands) or two 33-bit words (6 bands) of 11 bits
+    word_bits, band_bits = {1: (56, 11), 2: (33, 11)}[n_words]
+    n_bands = n_words * (word_bits // band_bits)
+    wmask = (1 << word_bits) - 1
 
-    def h(band_val):  # same value in all 5 bands
-        return sum(band_val << (k * band_bits) for k in range(5))
+    def h(band_val):  # same value in every band, split into words
+        v = sum(band_val << (k * band_bits) for k in range(n_bands))
+        return tuple((v >> (i * word_bits)) & wmask for i in range(n_words))
 
     fp = {}
     index_docs = [0, 1, 2, 3, 4, 5]
     new_docs = [10, 11, 12, 13]
     # frame 0: EVERY doc identical (black frame) -> one oversized bucket
     for d in index_docs + new_docs:
-        fp[(d, 0)] = 0
+        fp[(d, 0)] = h(0)
     # family A: index doc 0 and new doc 10 identical in frames 1, 2
     for f in (1, 2):
         fp[(0, f)] = h(7)
@@ -906,33 +945,43 @@ def test_framewise_hamming_matches_bucket_cap(spark):
         for f in (1, 2):
             fp[(d, f)] = h(100 + d)
 
-    rows = [(d, f, v) for (d, f), v in fp.items()]
-    union = spark.createDataFrame(rows, "doc_id long, frame_idx int, dhash long")
+    rows = [(d, f, *v) for (d, f), v in fp.items()]
+    schema = "doc_id long, frame_idx int, " + ", ".join(
+        f"w{i} long" for i in range(n_words)
+    )
+    union = spark.createDataFrame(rows, schema)
     existing = union.filter(union.doc_id < 10)
     new = union.filter(union.doc_id >= 10)
 
-    def run(cap):
-        return {
-            (r.new_id, r.match_id): (r.n_frames_matched, r.match_in_new)
-            for r in framewise_hamming_matches(
-                existing, new, bits=bits, band_bits=band_bits,
-                max_hamming=4, min_frames=2, max_bucket_size=cap,
+    def run(cap, min_frames=2):
+        return [
+            tuple(r)
+            for r in hamming_pairs(
+                new, index=existing, word_bits=word_bits,
+                band_bits=band_bits, max_hamming=4, group_col="frame_idx",
+                min_group_matches=min_frames, max_bucket_size=cap,
             ).collect()
-        }
+        ]
+
+    def as_dict(out):
+        assert len(out) == len({(a, b) for a, b, *_ in out})  # exactly once
+        return {(a, b): (n, in_new) for a, b, n, in_new in out}
 
     # uncapped: the black frame matches too -> 3 frames per family pair
-    assert run(None) == {
+    assert as_dict(run(None)) == {
         (10, 0): (3, False),
         (11, 12): (3, True),
         (12, 11): (3, True),
     }
     # capped at 5: the 10-doc black-frame bucket is dropped everywhere;
     # family matches survive via frames 1-2 only (counted once each)
-    assert run(5) == {
+    assert as_dict(run(5)) == {
         (10, 0): (2, False),
         (11, 12): (2, True),
         (12, 11): (2, True),
     }
+    # at min 3 frames the capped probe keeps nothing
+    assert run(5, min_frames=3) == []
 
 
 def test_audio_near_duplicates_selects_by_corpus_size(spark):
@@ -953,9 +1002,8 @@ def test_audio_near_duplicates_selects_by_corpus_size(spark):
     got_small = pairs(multimodal.audio_near_duplicates(pay, n_docs=30))
     assert got_small  # 56-bit mesh over the wide fixture still pairs
     want_wide = pairs(
-        dedup.multiword_hamming_pairs(
+        dedup.hamming_pairs(
             multimodal.audio_dhash_multiword(pay),
-            n_words=2,
             word_bits=36,
             band_bits=12,
             max_hamming=4,
@@ -977,11 +1025,10 @@ def test_audio_near_duplicates_selects_by_corpus_size(spark):
     # <= 4 and the family pair SET is preserved — values re-derived at
     # the finer mesh)
     want_3w = pairs(
-        dedup.multiword_hamming_pairs(
+        dedup.hamming_pairs(
             multimodal.audio_dhash_multiword(
                 pay, n_frames=multimodal.XWIDE_AUDIO_FRAMES, word_bits=44
             ),
-            n_words=3,
             word_bits=44,
             band_bits=22,
             max_hamming=4,
@@ -1015,13 +1062,13 @@ def test_video_near_duplicates_selects_by_corpus_size(spark):
         }
 
     want_wide = pairs(
-        dedup.framewise_multiword_hamming_pairs(
+        dedup.hamming_pairs(
             multimodal.video_frame_dhash_multiword(pay),
-            n_words=2,
             word_bits=36,
             band_bits=12,
             max_hamming=4,
-            min_frames=2,
+            group_col="frame_idx",
+            min_group_matches=2,
         )
     )
     # the family majority structure holds at the wide mesh
@@ -1043,15 +1090,15 @@ def test_video_near_duplicates_selects_by_corpus_size(spark):
     # the majority counts may drift at the margin — the ladder output
     # must equal the explicit three-word framewise kernel)
     want_3w = pairs(
-        dedup.framewise_multiword_hamming_pairs(
+        dedup.hamming_pairs(
             multimodal.video_frame_dhash_multiword(
                 pay, grid=12, word_bits=44
             ),
-            n_words=3,
             word_bits=44,
             band_bits=22,
             max_hamming=4,
-            min_frames=2,
+            group_col="frame_idx",
+            min_group_matches=2,
         )
     )
     got_3w = pairs(multimodal.video_near_duplicates(pay, n_docs=600_000))
@@ -1098,8 +1145,8 @@ def test_chunked_hamming_pairs_equals_single_pass(spark):
     )
 
     def wide_pairs(subset):
-        return dedup.multiword_hamming_pairs(
-            subset, n_words=2, word_bits=36, band_bits=12, max_hamming=4
+        return dedup.hamming_pairs(
+            subset, word_bits=36, band_bits=12, max_hamming=4
         )
 
     single = [(r.doc_a, r.doc_b) for r in wide_pairs(fp).collect()]
@@ -1125,10 +1172,10 @@ def test_chunked_hamming_pairs_equals_single_pass(spark):
         dedup.chunked_hamming_pairs(fp, wide_pairs, n_chunks=0)
 
 
-def test_multiword_hamming_pairs_bucket_cap(spark):
-    """max_bucket_size on the multiword kernel (the framewise cap,
-    ported): a degenerate bucket population emits nothing, a pair whose
-    OTHER band is under the cap survives and is emitted exactly once."""
+def test_hamming_pairs_two_words_bucket_cap(spark):
+    """max_bucket_size over two-word fingerprints: a degenerate bucket
+    population emits nothing, a pair whose OTHER band is under the cap
+    survives and is emitted exactly once."""
     from openstack_billing_from_db_spark.operators import dedup
 
     # 12 docs share word0 (band 0..2 over 36 bits at 12-bit bands all
@@ -1146,9 +1193,8 @@ def test_multiword_hamming_pairs_bucket_cap(spark):
     def run(cap):
         return {
             (r.doc_a, r.doc_b)
-            for r in dedup.multiword_hamming_pairs(
+            for r in dedup.hamming_pairs(
                 fp,
-                n_words=2,
                 word_bits=36,
                 band_bits=12,
                 max_hamming=4,
@@ -1166,37 +1212,31 @@ def test_multiword_hamming_pairs_bucket_cap(spark):
 
 
 def test_framewise_multiword_matches_narrow_kernel(spark):
-    """framewise_multiword_hamming_pairs at n_words=1/word_bits=56 must
-    reproduce framewise_hamming_pairs on the same 56-bit per-frame
-    hashes — the two kernels share semantics, not just intent."""
+    """The frame-grouped join over 56-bit per-frame hashes gives the
+    same majority counts at 8-bit bands as at the tuned 11-bit bands:
+    recall is exact at either width."""
     from openstack_billing_from_db_spark.operators import dedup
 
     docs = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
     fp = multimodal.video_frame_dhash(
         multimodal.synthesize_family_video_payloads(docs), n_samples=3
     )
-    narrow = {
-        (r.doc_a, r.doc_b): r.n_frames_matched
-        for r in dedup.framewise_hamming_pairs(
-            fp, bits=56, band_bits=11, max_hamming=4, min_frames=2
-        ).collect()
-    }
-    # band widths differ (8 divides the 56-bit word; the narrow kernel
-    # runs its tuned 11) — exact recall makes the outputs identical
-    # anyway: both emit ALL (pair, frame) matches at hamming ≤ 4
-    wide = {
-        (r.doc_a, r.doc_b): r.n_frames_matched
-        for r in dedup.framewise_multiword_hamming_pairs(
-            fp.select("doc_id", "frame_idx", F.col("dhash").alias("w0")),
-            n_words=1,
-            word_bits=56,
-            band_bits=8,
-            max_hamming=4,
-            min_frames=2,
-            bits=56,
-        ).collect()
-    }
-    assert wide == narrow and narrow
+    fp = fp.select("doc_id", "frame_idx", F.col("dhash").alias("w0"))
+
+    def majority(band_bits):
+        return {
+            (r.doc_a, r.doc_b): r.n_frames_matched
+            for r in dedup.hamming_pairs(
+                fp, word_bits=56, band_bits=band_bits, max_hamming=4,
+                group_col="frame_idx", min_group_matches=2,
+            ).collect()
+        }
+
+    # band widths differ (8 divides the 56-bit word; 11 is the tuned
+    # width) — exact recall makes the outputs identical anyway: both
+    # emit ALL (pair, frame) matches at hamming ≤ 4
+    narrow = majority(11)
+    assert majority(8) == narrow and narrow
 
 
 # --- video scene cuts (round 11) -----------------------------------------------
@@ -1438,9 +1478,7 @@ def test_three_word_plan_shapes(spark):
         word_bits=44,
     )
     plan = (
-        dedup.multiword_hamming_pairs(
-            fp, n_words=3, word_bits=44, band_bits=22, max_hamming=4
-        )
+        dedup.hamming_pairs(fp, word_bits=44, band_bits=22, max_hamming=4)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()

@@ -358,14 +358,27 @@ def test_ivf_partial_probe_recall(spark):
 
 def test_simhash_near_dup_plan_has_no_distinct_exchange(spark):
     """Pairs are emitted from their first matching band only — the plan
-    must contain NO aggregate-based dedup over the output pairs."""
-    docs = _near_dup_docs(spark)
-    fp = dedup.simhash(docs)
-    plan = (
-        dedup.simhash_near_duplicates(fp)
-        ._jdf.queryExecution().optimizedPlan().toString()
+    must contain NO aggregate-based dedup over the output pairs, in the
+    simhash wrapper and in every hamming_pairs form that emits pairs
+    (batch, frame-grouped, index probe)."""
+    fp = dedup.simhash(_near_dup_docs(spark)).select(
+        "doc_id", (F.col("doc_id") % 2).alias("g"), F.col("simhash").alias("w0")
     )
-    assert "Deduplicate" not in plan and "Aggregate [doc_a" not in plan
+    kw = {"word_bits": 32, "band_bits": 6, "max_hamming": 4}
+    forms = {
+        "simhash": dedup.simhash_near_duplicates(
+            fp.withColumnRenamed("w0", "simhash")
+        ),
+        "batch": dedup.hamming_pairs(fp, **kw),
+        "grouped": dedup.hamming_pairs(fp, group_col="g", **kw),
+        "probe": dedup.hamming_pairs(
+            fp.filter("doc_id >= 10"), index=fp.filter("doc_id < 10"), **kw
+        ),
+    }
+    for form, df in forms.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        for banned in ("Deduplicate", "Aggregate [doc_a", "Aggregate [new_id"):
+            assert banned not in plan, (form, banned)
     release_operator_caches()
 
 
